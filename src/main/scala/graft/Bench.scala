@@ -114,17 +114,6 @@ object Bench {
     // SPARK_GRAFT_BENCH_WARM=0 to reproduce the old cold-start shape.
     val warm = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARM", "1") != "0"
     def medianOf(ts: Vector[Double]): Double = ts.sorted.apply(ts.size / 2)
-    // ONE warm-until-convergence policy for the main loop AND the
-    // operator-slice loop (r18 review: two literal copies could
-    // desynchronize, warming operator_sec under a different policy
-    // than the headline seconds it is read against — the same hazard
-    // class as the r17 detector dedup)
-    def warmConverged(once: () => Double): Unit = if (warm) {
-      var prev = once()
-      var cur = once()
-      var extra = 0
-      while (prev > 1.3 * cur && extra < 6) { prev = cur; cur = once(); extra += 1 }
-    }
     // a query whose min iteration is far below its median, or whose
     // median is far above its last-3 median, did NOT measure a converged
     // state — the warm-up stalled on a pre-JIT plateau (two warm passes
@@ -186,7 +175,12 @@ object Bench {
       // median-of-last-3 "steady" statistic (VERDICT r10 item 2). Keep
       // warming while the time is still falling fast (prev > 1.3x cur),
       // bounded at 6 extra passes so a genuinely noisy query can't spin.
-      warmConverged(() => once())
+      if (warm) {
+        var prev = once()
+        var cur = once()
+        var extra = 0
+        while (prev > 1.3 * cur && extra < 6) { prev = cur; cur = once(); extra += 1 }
+      }
       val first = (1 to iters).map(_ => once()).toVector
       // bounded post-hoc retry: convergence-checked warm-up still stalls
       // when a query has TWO plateaus (interpreted vs JIT-compiled) and
@@ -202,64 +196,6 @@ object Bench {
     }
     val results = measured.map { case (name, ts, _) => name -> ts }
     val retriedOrig = measured.collect { case (name, _, Some(orig)) => name -> orig }
-    // operator-vs-verification split (VERDICT r17 task 4): the composed
-    // self-verifying queries run their operator PLUS an in-query oracle,
-    // so their headline seconds price verification as operator cost.
-    // A second pass measures ONLY the operator (fixtures built untimed,
-    // cleaned up after) — emitted as operator_sec in both artifacts.
-    // Skippable with SPARK_GRAFT_BENCH_OPSLICES=0.
-    val opSlices =
-      if (sys.env.getOrElse("SPARK_GRAFT_BENCH_OPSLICES", "1") == "0") Seq.empty
-      else graft.queries.OperatorSlices.slices.toSeq.sortBy(_._1)
-        .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-    val opResults = opSlices.flatMap { case (name, mk) =>
-      try {
-        val (thunk, cleanup) = mk(spark, sfDir) // fixture setup — untimed
-        // fixture blocks (incl. the SQL-cache RDDs backing persisted
-        // fixtures) must survive iterations; snapshot their ids so the
-        // per-iteration orphan sweep below can never drop them
-        val fixtureRddIds = spark.sparkContext.getPersistentRDDs.keySet
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          thunk()
-          val dt = (System.nanoTime() - t0) / 1e9
-          // release operator-internal tracked persists only — fixtures
-          // are plain persist() by the OperatorSlices contract. The
-          // release is BLOCKING (unlike the main loop, which clearCaches
-          // everything per iteration): async unpersist drained slower
-          // than iterations created blocks, evicting the fixture and
-          // inflating later iterations (q125 slice 2.3 s → 9.2 s in
-          // bench_r18_run1) — the barrier is outside the timed region.
-          // Then sweep orphaned raw-RDD persists (q128's localCheckpoint
-          // blocks — invisible to both releaseTracked and clearCache),
-          // sparing the snapshot-listed fixture RDDs.
-          graft.dsl.Rel.releaseTracked(blocking = true)
-          spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-            if (!fixtureRddIds.contains(id)) rdd.unpersist(true)
-          }
-          dt
-        }
-        warmConverged(() => once())
-        val ts = (1 to iters).map(_ => once()).toVector
-        cleanup()
-        spark.catalog.clearCache()
-        graft.dsl.Rel.releaseTracked()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        Some(name -> ts)
-      } catch {
-        case t: Throwable =>
-          System.err.println(s"[bench] OPERATOR SLICE FAILED $name: " +
-            s"${t.getClass.getSimpleName}: ${String.valueOf(t.getMessage).take(300)}")
-          // full sweep, fixtures included (cleanup() never ran): a
-          // failed slice's leaked localCheckpoint/fixture blocks would
-          // otherwise be snapshot-spared by every LATER slice and
-          // contaminate the rest of the pass (r18 review)
-          spark.catalog.clearCache()
-          graft.dsl.Rel.releaseTracked()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-          None
-      }
-    }
     def f(v: Double) = BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP)
     val medians = results.map { case (k, ts) => k -> medianOf(ts) }
     // steady state = median of the LAST 3 iterations — the adjudication
@@ -328,16 +264,6 @@ object Bench {
       else retriedOrig.map { case (k, ts) =>
         s"\"" + k + "\":" + ts.map(f).mkString("[", ",", "]")
       }.mkString(""","retried":{""", ",", "}")
-    // operator slice medians + per-iteration evidence (full artifact);
-    // compact line carries the medians only
-    val opMedians = opResults.map { case (k, ts) => k -> medianOf(ts) }
-    val opJson =
-      if (opMedians.isEmpty) ""
-      else opMedians.map { case (k, v) => s"\"" + k + "\":" + f(v) }
-        .mkString(""","operator_sec":{""", ",", "}") +
-        opResults.map { case (k, ts) =>
-          s"\"" + k + "\":" + ts.map(f).mkString("[", ",", "]")
-        }.mkString(""","operator_iters":{""", ",", "}")
     val heapGb = Runtime.getRuntime.maxMemory / (1 << 30)
     // the artifact names the config family it may be compared against
     // (BENCH_NOTES protocol: same heap, same cores, same sf) — a
@@ -345,6 +271,18 @@ object Bench {
     val comparableTo =
       if (math.abs(heapGb - pin) <= 1) s"heap${pin}g,local[$cpus],$sfDir"
       else s"NONE (heap ${heapGb}g != pinned ${pin}g - per-query deltas vs pinned-config artifacts are unadjudicable)"
+    // host RAM next to the pin (full artifact only): a pin above physical
+    // memory runs only while the heap never grows past RAM, so the
+    // artifact says when that is the case; the pin itself does not move.
+    // null where /proc/meminfo is unreadable (non-Linux hosts)
+    val hostMemGb: Option[Double] = scala.util.Try {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.readAllLines(java.nio.file.Paths.get("/proc/meminfo")).asScala
+        .collectFirst { case l if l.startsWith("MemTotal:") =>
+          l.split("\\s+")(1).toDouble / (1 << 20) }
+    }.toOption.flatten
+    val hostMemJson = hostMemGb.map(g => f(g).toString).getOrElse("null")
+    val pinExceedsRam = hostMemGb.map(g => (pin > g).toString).getOrElse("null")
     val metric = if (only.isDefined) "subset_total" else "total"
     val calibMed = medianOf(calib)
     val calibJson = calib.map(f).mkString("[", ",", "]")
@@ -370,10 +308,6 @@ object Bench {
     val normTotal = total * normFactor
     val normJson = medians.map { case (k, v) => s"\"" + k + "\":" + f(v * normFactor) }
       .mkString("""{""", ",", "}")
-    val opNormJson =
-      if (opMedians.isEmpty) ""
-      else opMedians.map { case (k, v) => s"\"" + k + "\":" + f(v * normFactor) }
-        .mkString(""","operator_sec_norm":{""", ",", "}")
     // env-derived strings ride raw into the JSON: escape them (the
     // Verify escaper's rule — an sfDir with a quote or backslash would
     // otherwise corrupt both artifacts; r17 review)
@@ -384,7 +318,7 @@ object Bench {
       case c => c.toString
     }
     val json =
-      s"""{"metric":"$metric","value":${f(total)},"unit":"sec","queries":$qs,"queries_steady":$steadyJson,"steady_total":${f(steadyTotal)},"warmed":$warm,"adjudication":"${jq(adjudication)}","iterations":$itersJson,"spread_max_over_min":$spread,"calibration_sec":${f(calibMed)},"calibration_iters":$calibJson,"calibration_end_sec":${f(calibEnd)},"calibration_ref":$CalibRef,"norm_factor":${f(normFactor)},"norm_total":${f(normTotal)},"queries_norm":$normJson$opNormJson,"sf":"${jq(sfDir)}","heap_gb":$heapGb,"comparable_to":"${jq(comparableTo)}"$onlyMark$failedMark$retriedMark$opJson}"""
+      s"""{"metric":"$metric","value":${f(total)},"unit":"sec","queries":$qs,"queries_steady":$steadyJson,"steady_total":${f(steadyTotal)},"warmed":$warm,"adjudication":"${jq(adjudication)}","iterations":$itersJson,"spread_max_over_min":$spread,"calibration_sec":${f(calibMed)},"calibration_iters":$calibJson,"calibration_end_sec":${f(calibEnd)},"calibration_ref":$CalibRef,"norm_factor":${f(normFactor)},"norm_total":${f(normTotal)},"queries_norm":$normJson,"sf":"${jq(sfDir)}","heap_gb":$heapGb,"host_mem_gb":$hostMemJson,"pin_exceeds_ram":$pinExceedsRam,"comparable_to":"${jq(comparableTo)}"$onlyMark$failedMark$retriedMark}"""
     // The launcher that captures this main's stdout keeps only the LAST
     // ~2000 characters; BENCH_r10/r11 show the full line (per-query
     // iteration arrays push it past 10 KB) arriving head-truncated and
@@ -420,13 +354,6 @@ object Bench {
       else "flagged:" + flaggedAll.mkString(",")
     val failedShort =
       if (failed.isEmpty) "" else s""","failed":${failed.size}"""
-    // operator slice medians in the compact line too (qNN keys,
-    // 2 decimals): the driver's BENCH_r{N}.json is parsed from stdout,
-    // so the split must survive the ~2000-char tail window
-    val opShort =
-      if (opMedians.isEmpty) ""
-      else opMedians.map { case (k, v) => s"\"${short(k)}\":${f2(v)}" }
-        .mkString(""","operator_sec":{""", ",", "}")
     // compact line carries the normalization SCALARS only (the full
     // queries_norm map lives in bench_out.json — the ~2000-char stdout
     // window can't fit a second per-query map): per-query sec_norm =
@@ -439,35 +366,26 @@ object Bench {
     // head-truncated the driver artifact (the exact failure this line
     // exists to prevent); those three scalars are derivable (norm_total
     // = value × norm_factor) or adjudication-covered (steady).
-    def mkCompact(ops: String, norm: String) =
-      s"""{"metric":"$metric","value":${f(total)},"unit":"sec","queries":$qsShort,"adjudication":"$adjShort"$failedShort$ops,"calibration_sec":${f2(calibMed)},"norm_factor":${f2(normFactor)}$norm,"sf":"${jq(sfDir)}","heap_gb":$heapGb,"comparable_to":"${jq(comparableTo)}","detail":"bench_out.json"$onlyMark}"""
+    def mkCompact(norm: String) =
+      s"""{"metric":"$metric","value":${f(total)},"unit":"sec","queries":$qsShort,"adjudication":"$adjShort"$failedShort,"calibration_sec":${f2(calibMed)},"norm_factor":${f2(normFactor)}$norm,"sf":"${jq(sfDir)}","heap_gb":$heapGb,"comparable_to":"${jq(comparableTo)}","detail":"bench_out.json"$onlyMark}"""
     // calibration-normalized per-query map in the compact line too
     // (r21 VERDICT task 7: the round-over-round comparison reads the
     // stdout artifact, and r21's 94 phantom "regressions" were pure
     // ambient that queries_norm would have shown through) — but ONLY
     // when it fits: the launcher keeps the LAST ~2000 stdout chars, and
     // a full-suite line cannot carry two 132-entry maps. Subset runs
-    // (the A/B workflow) get the map inline; full runs get the marker —
-    // the full map always lives in bench_out.json, and per-query
+    // (the A/B workflow) get the map inline; full runs drop it — the
+    // full map always lives in bench_out.json, and per-query
     // sec_norm = sec × norm_factor is one multiplication either way.
     val qsNormShort = medians.map { case (k, v) =>
       s"\"${short(k)}\":${f2(v * normFactor)}" }
       .mkString(""","queries_norm":{""", ",", "}")
-    // last-resort fallback: a line still past the window drops first
-    // the queries_norm map, then the operator_sec map (both live in
+    // a line past the window drops the queries_norm map (it lives in
     // full in bench_out.json) rather than arriving truncated — an
-    // unparseable artifact zeroes the round's perf signal; a full-suite
-    // line therefore stays BYTE-CONSERVATIVE with the r21 shape
+    // unparseable artifact zeroes the round's perf signal
     val compact = {
-      val withNorm = mkCompact(opShort, qsNormShort)
-      val base = mkCompact(opShort, "")
-      val marker = ""","operator_sec":"see bench_out.json""""
-      if (withNorm.length <= 1950) withNorm
-      // length guard on the MAP ITSELF, not emptiness: substituting the
-      // marker for an operator map no longer than the marker makes the
-      // line LONGER — the exact failure this branch exists to stop
-      else if (base.length <= 1950 || opShort.length <= marker.length) base
-      else mkCompact(marker, "")
+      val withNorm = mkCompact(qsNormShort)
+      if (withNorm.length <= 1950) withNorm else mkCompact("")
     }
     if (compact.length > 1950)
       System.err.println(s"[bench] WARNING: compact line ${compact.length} chars — near the launcher's ~2000-char tail window")

@@ -109,12 +109,14 @@ object Curate {
     // persisted: prefixSum's 2-pass evaluates its input lineage TWICE
     // (per-partition totals job + embedding job), and here that lineage
     // carries the BPE encode kernel — the single dominant cost
-    // (TokenPackProbe 16x: encode 16.6 s of a 31.9 s total, and the
+    // (SCALECURVE.md §q125 token-pack, 16x: encode 16.6 s of a 31.9 s
+    // total, and the
     // un-persisted pipeline paid it twice). The q78 lesson does not
     // apply: what persists is counts + chunk text already materialized
     // by the explode, not an avoidable extra corpus scan.
     // PARALLELIZE THE KERNEL (r22, guide §2.5 input parallelism): the
-    // encode is the pipeline's dominant compute (TokenPackProbe 1×:
+    // encode is the pipeline's dominant compute (OPTIMIZATION_r22.md
+    // §1, 1×:
     // encode 3.0 s warm of q125's ~4.2 s total — and the r21 scaling
     // block read q125 at ratio 1.03, i.e. the SAME time at 8 and 32
     // cores: serial). Chunk rows inherit the docs scan's partitioning,
@@ -455,8 +457,8 @@ object Curate {
     * ingest loop from nothing — derived THROUGH the operators' own
     * expressions from `docs.limit(0)`, so the store schemas can never
     * drift from what [[incrementalCurate]] appends. ONE definition:
-    * the q128/q129 driver queries, their bench slices and the
-    * scale-curve harness each built these by hand (r19 review — two
+    * the q128/q129 driver queries and the scale-curve harness each
+    * built these by hand (r19 review — two
     * sites with hand-typed `toDF` schemas, exactly the drift the
     * derive-through-operators rule exists to prevent). Callers
     * `localCheckpoint()` the frames (in-session loop) or `writeBucketed`

@@ -719,7 +719,8 @@ object Dedup {
     *        rows. MUST be materialized (a table read or a persisted
     *        frame): two store-side consumers evaluate it inside the
     *        op, and for a derived lineage whether AQE reuses the
-    *        exchange is plan luck — the r17 LshIncProfile measured an
+    *        exchange is plan luck — the r17 stage profile
+    *        (SCALECURVE.md §q119 incremental LSH) measured an
     *        un-persisted derived store swinging 23 s ↔ 183 s at 64×
     *        on exactly that flip (flat 17–19 s persisted)
     * @param splitInvariant opt-in batch-split-invariant mode: the

@@ -35,6 +35,12 @@ object Retrieval {
 
   /** BM25 scores for every (query, matching document) pair.
     *
+    * Precondition: `idCol` is unique — one row per document. Document
+    * length is each row's token count and N counts rows, so a corpus
+    * that splits a document over several rows sharing an id scores it
+    * as several documents; merge such rows before calling. Not checked
+    * (a check would cost a corpus-wide aggregation).
+    *
     * The (doc,term,tf) frame is persisted ([[graft.dsl.Rel.track]])
     * because four plan branches read it: after materializing the
     * result, call `Rel.releaseTracked()` to free it (the repo-wide

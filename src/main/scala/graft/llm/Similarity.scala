@@ -295,9 +295,11 @@ object Similarity {
     // skip null vectors and vectors with null elements: the collect
     // side's getSeq(...).map would NPE on them, crashing every
     // training entry point while the distributed scoring paths
-    // tolerate the same rows (cosineExpr -> null) — r17 review
+    // tolerate the same rows (cosineExpr -> null) — r17 review. Null
+    // ids too: the driver-side id sort below would NPE on them
     val v0 = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .filter(col("v").isNotNull && !exists(col("v"), _.isNull))
+      .filter(col("id").isNotNull && col("v").isNotNull &&
+        !exists(col("v"), _.isNull))
     val total = v0.count()
     val s = if (total > maxTrain) v0.sample(maxTrain.toDouble / total, 42L) else v0
     // the id sort happens DRIVER-side on the collected sample (r22):
@@ -338,8 +340,9 @@ object Similarity {
     * bounded at `maxTrain` rows by design, so each "iteration" was a
     * full driver-scheduled job (plan + codegen compile of a
     * codebook-literal expression that CHANGES every iteration) over a
-    * few MB of data. Stage-timing (tools/PqTime) put q92's codebook
-    * training at 2.7 s of its 4 s total, all scheduling/codegen. A
+    * few MB of data. Stage timing (BENCH_NOTES §Round 14, PQ training
+    * rework) put q92's codebook training at 2.7 s of its 4 s total,
+    * all scheduling/codegen. A
     * model fit on a model-sized sample belongs on the driver: training
     * is now ONE count + ONE collect, and the cluster only ever runs
     * the corpus-wide assignment/encode (which stays codegen'd and
@@ -554,7 +557,8 @@ object Similarity {
     // maxTrain bounds codebook training INDEPENDENT of corpus size:
     // 16k vectors give ~1k training points per codeword per subspace
     // at the default (m, codewords) — sampling past that buys nothing
-    // (PqProbe recall flat), while training on the corpus would make
+    // (recall flat — SCALECURVE.md §Round 13 session-3 addendum),
+    // while training on the corpus would make
     // the Lloyd aggregations scale with the data
     val books = pqCodebooks(corpus, corpusId, vecCol, m, codewords, iters, maxTrain)
     val dsub = books(0)(0).length
@@ -617,8 +621,8 @@ object Similarity {
     // sample's residuals computed driver-side with the identical
     // assignment kernel and float32 rounding the distributed residual
     // encode applies — no second corpus-side count/sample pipeline
-    // (r13 ran ~10 training jobs here; tools/PqTime showed they were
-    // most of q93's wall time)
+    // (r13 ran ~10 training jobs here, most of q93's wall time —
+    // OPTIMIZATION_r22.md §4)
     val sample = sampleVectors(corpus, corpusId, vecCol, maxTrain)
     val cents = kmeansFromSample(sample, nCells, iters)
     val resSample = sample.map { x =>

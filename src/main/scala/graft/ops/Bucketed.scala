@@ -245,15 +245,20 @@ object Bucketed {
     * of the table, per-bucket parallel, no network movement.
     */
   /** File-count-budget compaction CADENCE (r22, the r20 deferred item;
-    * guide §6 small files): compact only when some bucket has
-    * accumulated more than `maxRunsPerBucket` sorted runs — the
-    * maintenance policy [[graft.llm.Curate.streamingIngest]]'s scaladoc
-    * prescribes, made mechanical. The check is metadata-only (one
-    * filesystem listing of the table directory, no data read, no Spark
-    * job): since [[appendBucketed]] pre-partitions to exactly ONE file
-    * per bucket per append, parquet files ÷ buckets = sorted runs per
-    * bucket, so the listing decides the budget exactly. A compact is a
-    * full read+write of the table — running it on every trigger would
+    * guide §6 small files): compact only when the table's file count
+    * says its buckets hold more than `maxRunsPerBucket` sorted runs on
+    * average — the maintenance policy
+    * [[graft.llm.Curate.streamingIngest]]'s scaladoc prescribes, made
+    * mechanical. The check is metadata-only (one filesystem listing of
+    * the table directory, no data read, no Spark job):
+    * [[appendBucketed]] pre-partitions to at most ONE file per
+    * bucket per append, so parquet files ÷ buckets approximates sorted
+    * runs per bucket. It is a heuristic, not an exact per-bucket count:
+    * the bootstrap [[writeBucketed]] does not pre-partition (up to
+    * tasks × buckets files), which can trigger an early rewrite, and an
+    * append that leaves buckets empty writes fewer files, so a skewed
+    * bucket's run count can exceed what the average shows. A compact is
+    * a full read+write of the table — running it on every trigger would
     * make maintenance cost O(triggers × table) instead of amortized
     * O(table × log); past the budget the rewrite restores
     * one-file-per-bucket and the counter resets.

@@ -237,7 +237,8 @@ object QuantileSketch {
 
   /** The sketch's items as ONE sorted `array<struct<value,weight>>`
     * column — compute this once per sketch row and feed any number of
-    * [[quantileAt]] calls. The r17 KllProbe finding behind the split:
+    * [[quantileAt]] calls. The finding behind the split (BENCH_NOTES
+    * §Round 16, q120 attribution):
     * inlining N self-contained `quantile` trees into one projection
     * cost 5.1 s for N=5 at sf0.1 (a super-linear optimizer/codegen
     * blowup on the duplicated sort/flatten subtrees — 50× ONE tree's

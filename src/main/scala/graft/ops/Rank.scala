@@ -55,9 +55,10 @@ object Rank {
     // lineage, and ties re-ordered between runs would split offsets.
     // NOTE the same two-job shape means an EXPENSIVE upstream (e.g. a
     // per-row encode kernel) runs twice unless the caller persists it
-    // first — Curate.tokenPack does (TokenPackProbe: 2x the encode
-    // cost un-persisted); cheap-scan callers should NOT (the r10 q78
-    // measurement: persisting a plain corpus scan was the pessimization).
+    // first — Curate.tokenPack does (SCALECURVE.md §q125 token-pack:
+    // 2x the encode cost un-persisted); cheap-scan callers should NOT
+    // (the r10 q78 measurement: persisting a plain corpus scan was the
+    // pessimization).
     // checkUniqueSort=true runs one extra debug aggregation asserting
     // the sort keys really are unique (off by default: it costs a scan).
     val vf = df.schema(df.schema.fieldIndex(valueCol))

@@ -26,7 +26,8 @@ case class TopKBuf(var n: Int, var scores: Array[Double], var ids: Array[Long])
   * for similarity search.
   *
   * Buffer discipline (the r15 HeavyHittersAgg lesson, measured
-  * 1.27–1.47× there; TkBench A/Bs this one): parallel primitive
+  * 1.27–1.47× there, 1.06–1.12× here — BENCH_NOTES §Round 16,
+  * TopKAgg rework A/B): parallel primitive
   * arrays mutated in place. The steady-state reject — the common case
   * once the buffer is warm — is ONE primitive compare against the
   * current k-th element; an improving insert is a binary search plus

@@ -68,9 +68,9 @@ object BpeTokensF {
     * encodes PER WORD (no cross-word merges — [[graft.llm.Bpe
     * .encodeText]] is split + per-word greedy apply), so memoizing
     * whole words is byte-exact, and Zipf repetition makes it the
-    * dominant win: TokenPackProbe measured ~25 word encodes per
-    * distinct word at 64×. Cleared when the merges object changes;
-    * cleared wholesale at `MaxMemo` entries (regrows hot words
+    * dominant win: ~25 word encodes per distinct word at 64×
+    * (BENCH_NOTES §Retired probes). Cleared when the merges object
+    * changes; cleared wholesale at `MaxMemo` entries (regrows hot words
     * immediately — an LRU's bookkeeping costs more than the rare
     * rebuild). Tokens are cached as UTF8String so conversion is also
     * once per distinct word. */

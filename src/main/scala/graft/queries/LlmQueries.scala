@@ -350,7 +350,7 @@ object LlmQueries {
       import s.implicits._
       val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val storeDocs = d.filter(pmod(col("doc_id"), lit(2)) === 0)
-      // copy-id base DERIVED from the data (the q128/evensBatch rule,
+      // copy-id base DERIVED from the data (the q128 rule,
       // r19 queries deep-dive): a hardcoded 1000000L base aliases copy
       // ids with real ids on a salted/256× corpus (doc_id ≥ 1e6), and
       // the re-ingest invariant below would then miscount a REAL admit
@@ -716,7 +716,8 @@ object LlmQueries {
     // the exact re-rank makes every returned cosine recomputable, and
     // row/rank-shape invariants are oracle constants. Parameters
     // (m=16, cw=16, rerank=8) carry measured recall 0.88–0.94 vs
-    // brute force (tools/PqProbe; PqSpec pins the floor).
+    // brute force (SCALECURVE.md §Round 13 session-3 addendum; PqSpec
+    // pins the floor).
     "q92_pq_topk" -> ((s, dir) => {
       val v = t(s, dir, "embeddings")
       annShapeCheck(s, v,
@@ -727,7 +728,8 @@ object LlmQueries {
 
     // IVFPQ: coarse cells + residual PQ + cell-pruned ADC shortlist +
     // exact re-rank — same properties pattern; recall 0.88 at nprobe=4
-    // scanning ~25% of the compressed lists (tools/PqProbe)
+    // scanning ~25% of the compressed lists (SCALECURVE.md §Round 13
+    // session-3 addendum)
     "q93_ivfpq_topk" -> ((s, dir) => {
       val v = t(s, dir, "embeddings")
       annShapeCheck(s, v,
@@ -1068,8 +1070,8 @@ object LlmQueries {
       val phis = Seq(0.01, 0.25, 0.50, 0.75, 0.99)
       // sort the sketch ONCE, fold once per φ — inlining 5 independent
       // quantile() trees into this projection costs 5.1 s at sf0.1
-      // (KllProbe, the optimizer/codegen blowup documented on
-      // QuantileSketch.weightedItems)
+      // (BENCH_NOTES §Round 16, the optimizer/codegen blowup
+      // documented on QuantileSketch.weightedItems)
       val est = global.select(
           graft.ops.QuantileSketch.totalWeight(col("kll")).as("tw"),
           graft.ops.QuantileSketch.weightedItems(col("kll")).as("items"))
@@ -1581,8 +1583,8 @@ object LlmQueries {
       val nQualityPass = hdr.getLong(1)
       val copyBase = if (hdr.isNullAt(2)) 1L else hdr.getLong(2) + 1L
       // empty bootstrap frames derived THROUGH the operators' own
-      // expressions (Curate.emptyStores — shared with q128, the bench
-      // slices and the scale-curve harness), so the tables' schemas
+      // expressions (Curate.emptyStores — shared with q128 and the
+      // scale-curve harness), so the tables' schemas
       // can never drift from what incrementalCurate appends
       val d0 = d.limit(0)
       val (fp0, sig0, idx0) = graft.llm.Curate.emptyStores(d, "doc_id", "text")
@@ -1748,9 +1750,8 @@ object LlmQueries {
       import s.implicits._
       val ML = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       // bounded sub-corpus + planted chain from the SHARED fixture
-      // (QCommon.chainCorpus — one definition for the query and its
-      // operator slice): invariance is a property of the RULE, not of
-      // corpus volume — 7 full ingest passes over the whole sf0.1
+      // (QCommon.chainCorpus): invariance is a property of the RULE,
+      // not of corpus volume — 7 full ingest passes over the whole sf0.1
       // corpus at threshold 0.45 cost 19 s of pure re-demonstration
       // (scale evidence lives in the q119/q128 curves, not here)
       val (corpus0, t1, t2, aId, _, cId) = QCommon.chainCorpus(s, dir)

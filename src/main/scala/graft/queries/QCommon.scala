@@ -70,10 +70,14 @@ private[graft] object QCommon {
     * fp append ORDER is its crash-replay correctness argument and must
     * stay sequential. Exceptions: the first failure is rethrown (its
     * cause, not the ExecutionException wrapper) after all tasks finish.
+    * An interrupt of the calling thread is rethrown the same way, also
+    * only after every task has finished, with the interrupt flag
+    * restored.
     */
   def parJobs(tasks: (() => Unit)*): Unit = {
     if (tasks.size <= 1) { tasks.foreach(_()); return }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
+    var interrupted = false
     try {
       val futs = tasks.map(t => pool.submit(new java.util.concurrent.Callable[Unit] {
         def call(): Unit = t()
@@ -82,30 +86,39 @@ private[graft] object QCommon {
       // must not leave sibling writes racing the caller's error path
       val errs = futs.flatMap(f =>
         try { f.get(); None }
-        catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) })
+        catch {
+          case e: java.util.concurrent.ExecutionException => Some(e.getCause)
+          case e: InterruptedException => interrupted = true; Some(e)
+          case e: Throwable => Some(e)
+        })
       errs.headOption.foreach(throw _)
-    } finally pool.shutdown()
+    } finally {
+      // an interrupted get() returns before its task ends: wait the
+      // pool out (re-waiting through further interrupts) before leaving
+      pool.shutdown()
+      var done = false
+      while (!done)
+        try done = pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
+        catch { case _: InterruptedException => interrupted = true }
+      if (interrupted) Thread.currentThread().interrupt()
+    }
   }
 
-  /** Copy-id base for the re-ingest fixtures (q109/q119/q126–q129 and
-    * the bench slices): `max(id) + 1`, DERIVED from the data — a
-    * hardcoded constant aliases copy ids with real ids on a
-    * salted/256× id space (the r18 q128 review finding). ONE
-    * definition with ONE empty-corpus guard: on an empty corpus
-    * `max()` is NULL and an unguarded `getLong` was an opaque NPE
-    * (r19 review) — return 1L instead, preserving the pre-derivation
-    * behavior (no copies exist to collide; the queries emit their
-    * empty/vacuous results, matching their oracles). */
+  /** Copy-id base for the re-ingest fixtures (q109/q119/q126–q129):
+    * `max(id) + 1`, DERIVED from the data — a hardcoded constant
+    * aliases copy ids with real ids on a salted/256× id space (the r18
+    * q128 review finding). ONE definition with ONE empty-corpus guard:
+    * on an empty corpus `max()` is NULL and an unguarded `getLong` was
+    * an opaque NPE (r19 review) — return 1L instead, preserving the
+    * pre-derivation behavior (no copies exist to collide; the queries
+    * emit their empty/vacuous results, matching their oracles). */
   def copyBase(df: DataFrame, idCol: String): Long = {
     import org.apache.spark.sql.functions.{col, max}
     val r = df.agg(max(col(idCol))).head()
     if (r.isNullAt(0)) 1L else r.getLong(0) + 1L
   }
 
-  /** The q130 split-invariance fixture, ONE definition for the query
-    * and its operator slice (the evensBatch rule: duplicated fixture
-    * math drifts, and then operator_sec silently prices a different
-    * operator than the headline runs): a bounded ≤1500-real-doc
+  /** The q130 split-invariance fixture: a bounded ≤1500-real-doc
     * sub-corpus with ids shifted ×10 plus a planted a~b~c near-dup
     * chain (the LlmSpec sliding-window texts, J(a,b)=J(b,c)≈0.58,
     * J(a,c)≈0.31 at threshold 0.45), chain ids ≡1 (mod 10) — one per

@@ -221,8 +221,9 @@ object ScaleCurve {
       // while candidate verification stays bounded by bucket caps.
       // The store is built and PERSISTED outside the timed region —
       // the operator's contract (a store is a materialized table from
-      // previous ingests, not a lineage). The r17 LshIncProfile
-      // finding: an un-persisted derived store is evaluated by BOTH
+      // previous ingests, not a lineage). The r17 stage-profile
+      // finding (SCALECURVE.md §q119 incremental LSH): an
+      // un-persisted derived store is evaluated by BOTH
       // store-side consumers inside the op, and whether AQE reuses
       // that exchange is plan luck — iterations swung 23 s ↔ 183 s at
       // 64× on exactly that flip; with the store persisted the same
@@ -286,8 +287,8 @@ object ScaleCurve {
           report(q, () => {
             val (fp0, sig0, idx0) = Curate.emptyStores(
               docs.select(col("doc_id"), col("text")), "doc_id", "text")
-            // r21 store discipline (mirrors the driver query + bench
-            // slice): ONE localCheckpoint per round — the result frame
+            // r21 store discipline (mirrors the driver query): ONE
+            // localCheckpoint per round — the result frame
             // — with the stores as lazy unions of its flat delta
             // projections, instead of three full-store
             // re-materializations per round
@@ -596,8 +597,9 @@ object ScaleCurve {
       // merges train ONCE per factor, OUTSIDE the timed region (r17
       // ADVICE: train inside the report() closure charged a full
       // corpus word-count aggregation to every timed iteration,
-      // contradicting this comment and TokenPackProbe's fullNoTrain
-      // decomposition); the timed region is chunk scan + codegen'd BPE
+      // contradicting this comment and the train-excluded
+      // decomposition in SCALECURVE.md §q125 token-pack); the timed
+      // region is chunk scan + codegen'd BPE
       // tokenCount + 2-pass prefix sum + bin assignment — every term
       // corpus-linear. Returned metric = bin count (token mass grows
       // m×, so bins must too).

@@ -539,6 +539,14 @@ class SimilaritySpec extends SparkSuite {
     assert(cents.length == 2)
   }
 
+  test("training samples skip null ids instead of NPE-ing in the driver-side id sort") {
+    val df = Seq((Some(1L), Array(1f, 0f)), (Some(2L), Array(0f, 1f)),
+        (None, Array(1f, 1f)), (Some(3L), Array(0.5f, 0.5f)))
+      .toDF("vec_id", "embedding")
+    val cents = Similarity.kmeansCentroids(df, "vec_id", "embedding", 2, 1)
+    assert(cents.length == 2)
+  }
+
   test("plane components do not collide across planes for dim > 64 (r17 review)") {
     // pre-r17 stride 64: bucket bit j of one-hot(64+i) equaled bit j
     // of plane j+1 at i — adjacent planes shared shifted components.
@@ -2110,7 +2118,8 @@ class PqSpec extends SparkSuite {
       k, m = 16, codewords = 16, rerank = 8))
     val recalls = exact.map { case (id, ex) => (pq.getOrElse(id, Set.empty[Long]) & ex).size.toDouble / ex.size }
     val mean = recalls.sum / recalls.size
-    // measured 0.88 on this table (tools/PqProbe) -- 0.6 leaves margin
+    // measured 0.88 on this table (BENCH_NOTES §Retired probes) --
+    // 0.6 leaves margin
     assert(mean >= 0.6, f"mean recall $mean%.3f")
   }
 
@@ -2136,7 +2145,8 @@ class PqSpec extends SparkSuite {
     val got = sets(res)
     val recalls = exact.map { case (id, ex) => (got.getOrElse(id, Set.empty[Long]) & ex).size.toDouble / ex.size }
     val mean = recalls.sum / recalls.size
-    // measured 0.90 at these params (tools/PqProbe) -- 0.6 leaves margin
+    // measured 0.90 at these params (BENCH_NOTES §Retired probes) --
+    // 0.6 leaves margin
     assert(mean >= 0.6, f"mean recall $mean%.3f")
     res.unpersist()
   }

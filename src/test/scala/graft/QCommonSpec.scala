@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.queries.QCommon
+import graft.queries.{LlmQueries, QCommon}
 
 /** QCommon.multisetEqual / multisetDiff (r21): the one-job replacement
   * for the capstones' two-sided exceptAll parity checks. The contract
@@ -9,9 +9,16 @@ import graft.queries.QCommon
   * agree with the exceptAll pair on every shape the capstones compare
   * (long ids, (id, band, key) index rows, array-typed sig/vec columns,
   * null keys, empty frames).
+  *
+  * Also the fixture guards: copy ids must be derived from the data,
+  * never a hardcoded constant — a constant base aliases copy ids with
+  * real ids on a salted/256× corpus (doc_id ≥ 1e6) — and the q130
+  * chain corpus must fail diagnosably when it cannot be planted.
   */
 class QCommonSpec extends SparkSuite {
   import spark.implicits._
+
+  private val dir = "/root/testdata/sf0.001"
 
   private def viaExceptAll(a: org.apache.spark.sql.DataFrame,
                            b: org.apache.spark.sql.DataFrame): Boolean =
@@ -109,5 +116,136 @@ class QCommonSpec extends SparkSuite {
         () => (),
         () => throw new IllegalArgumentException("pj-boom")))
     assert(boom.getMessage == "pj-boom")
+  }
+
+  test("parJobs waits for every task before rethrowing an interrupt of its caller") {
+    // the caller is interrupted while a sibling task still runs: the
+    // InterruptedException must surface only after every task has
+    // finished, with the caller's interrupt flag restored
+    val running = new java.util.concurrent.atomic.AtomicInteger(0)
+    val started = new java.util.concurrent.CountDownLatch(2)
+    def task(ms: Long): () => Unit = () => {
+      running.incrementAndGet(); started.countDown()
+      try Thread.sleep(ms) finally running.decrementAndGet()
+    }
+    @volatile var thrown: Throwable = null
+    @volatile var runningAtThrow = -1
+    @volatile var flagRestored = false
+    val caller = new Thread(() =>
+      try QCommon.parJobs(task(100L), task(1500L))
+      catch { case t: Throwable =>
+        runningAtThrow = running.get()
+        flagRestored = Thread.currentThread().isInterrupted
+        thrown = t
+      })
+    caller.start()
+    started.await()
+    caller.interrupt()
+    caller.join(30000L)
+    assert(!caller.isAlive)
+    assert(thrown.isInstanceOf[InterruptedException], String.valueOf(thrown))
+    assert(runningAtThrow == 0, s"$runningAtThrow task(s) still running at the throw")
+    assert(flagRestored)
+  }
+
+  test("chainCorpus fails diagnosably when the fixed sub-corpus bound misses the id space (r19 review)") {
+    import spark.implicits._
+    // pre-guard this was an opaque NPE from max(doc_id) = null
+    val tall = Seq((2000000L, "aa bb"), (3000000L, "cc dd")).toDF("doc_id", "text")
+    val tmp = java.nio.file.Files.createTempDirectory("chain_guard").toString
+    tall.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    try {
+      val e = intercept[IllegalArgumentException](QCommon.chainCorpus(spark, tmp))
+      assert(e.getMessage.contains("doc_id < 1500"), e.getMessage)
+    } finally {
+      new scala.reflect.io.Directory(new java.io.File(tmp)).deleteRecursively()
+    }
+  }
+
+  test("chainCorpus fails diagnosably on a too-small sub-corpus (r19 ADVICE: tercile guard)") {
+    import spark.implicits._
+    // maxId after the ×10 shift = 20 < 60: the -9-shifted chain ids
+    // would collide / go negative — pre-guard the fixture corrupted
+    // SILENTLY instead of failing
+    val tiny = Seq((0L, "aa bb"), (1L, "cc dd"), (2L, "ee ff"))
+      .toDF("doc_id", "text")
+    val tmp = java.nio.file.Files.createTempDirectory("chain_tiny").toString
+    tiny.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    try {
+      val e = intercept[IllegalArgumentException](QCommon.chainCorpus(spark, tmp))
+      assert(e.getMessage.contains("too small"), e.getMessage)
+    } finally {
+      new scala.reflect.io.Directory(new java.io.File(tmp)).deleteRecursively()
+    }
+  }
+
+  test("q109/q119/q126/q127 derive their copy-id base — invariants hold when real ids straddle 1e6 (r19 queries deep-dive)") {
+    import spark.implicits._
+    // the salted shape: real ids straddle the old hardcoded 1000000L
+    // base. Pre-fix, q119/q126/q127 admitted doc 1000001 (a REAL odd
+    // doc) and their `id >= 1000000L` re-ingest invariant read FALSE.
+    def words(seed: Int) = (0 until 10).map(i => s"w${seed}x$i").mkString(" ")
+    val salted = Seq((2L, words(1)), (999999L, words(2)),
+        (1000001L, words(3)), (1500000L, words(4)))
+      .toDF("doc_id", "text")
+    val tmp = java.nio.file.Files.createTempDirectory("qid_guard").toString
+    salted.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    try {
+      for (q <- Seq("q119_incremental_lsh", "q126_incremental_curate",
+          "q127_incremental_lsh_indexed")) {
+        val df = LlmQueries.queries(q)(spark, tmp)
+        val row = df.head()
+        df.schema.fields.zipWithIndex.foreach {
+          case (f, i) if f.dataType == org.apache.spark.sql.types.BooleanType =>
+            assert(row.getBoolean(i), s"$q: invariant '${f.name}' is false")
+          case _ =>
+        }
+      }
+      // q109's oracle derives the same MAX+1 base: admits = the odd ids
+      val ids = LlmQueries.queries("q109_incremental_dedup")(spark, tmp)
+        .as[Long].collect().toSeq
+      assert(ids == Seq(999999L, 1000001L), ids.toString)
+    } finally {
+      spark.catalog.clearCache()
+      graft.dsl.Rel.releaseTracked()
+      new scala.reflect.io.Directory(new java.io.File(tmp)).deleteRecursively()
+    }
+  }
+
+  test("copy-id base derivation survives an EMPTY corpus — no opaque NPE (r19 review)") {
+    import spark.implicits._
+    // pre-guard, QCommon.copyBase's max(doc_id) was NULL here and
+    // getLong threw an opaque NPE; the guarded base (1L) restores the
+    // pre-derivation behavior: empty/vacuous results matching the oracle
+    val tmp = java.nio.file.Files.createTempDirectory("empty_guard").toString
+    Seq.empty[(Long, String)].toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    try {
+      for (q <- Seq("q119_incremental_lsh", "q126_incremental_curate",
+          "q127_incremental_lsh_indexed")) {
+        val df = LlmQueries.queries(q)(spark, tmp)
+        val row = df.head()
+        assert(row.getLong(0) == 0L, s"$q: n_batch on empty corpus")
+        df.schema.fields.zipWithIndex.foreach {
+          case (f, i) if f.dataType == org.apache.spark.sql.types.BooleanType =>
+            assert(row.getBoolean(i), s"$q: invariant '${f.name}' is false")
+          case _ =>
+        }
+      }
+      assert(LlmQueries.queries("q109_incremental_dedup")(spark, tmp).count() == 0L)
+    } finally {
+      spark.catalog.clearCache()
+      graft.dsl.Rel.releaseTracked()
+      new scala.reflect.io.Directory(new java.io.File(tmp)).deleteRecursively()
+    }
+  }
+
+  test("chainCorpus plants one chain member per prefix tercile, ids collision-free") {
+    val (corpus, t1, t2, aId, bId, cId) = QCommon.chainCorpus(spark, dir)
+    import org.apache.spark.sql.functions._
+    assert(aId < t1 && t1 <= bId && bId < t2 && t2 <= cId)
+    assert(Seq(aId, bId, cId).forall(_ % 10 == 1)) // never a x10 real id
+    assert(corpus.groupBy(col("doc_id")).count()
+      .filter(col("count") > 1).count() == 0)
   }
 }

@@ -135,6 +135,10 @@ object Bench {
     // so (pre-r17 the catch silently recorded a broken query as a
     // ~0.02 s "speedup"; r17 review)
     val failed = scala.collection.mutable.LinkedHashSet[String]()
+    // each query's row count, as its timed count() returns it (the last
+    // successful iteration's): a scale curve reads "output grows exactly
+    // m×" from the full artifact without a second run
+    val rows = scala.collection.mutable.Map[String, Long]()
     val measured = selected.map { case (name, fn) =>
       // timed action is count(): a KNOWN, documented trade — Catalyst
       // prunes columns the count doesn't need, so work living ONLY in
@@ -146,13 +150,15 @@ object Bench {
       // comparable_to contract (r17 review).
       def once(): Double = {
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch {
+        val n = try fn(spark, sfDir).count() catch {
           case t: Throwable =>
             failed += name
             System.err.println(s"[bench] QUERY FAILED $name: " +
               s"${t.getClass.getSimpleName}: ${String.valueOf(t.getMessage).take(300)}")
+            -1L
         }
         val dt = (System.nanoTime() - t0) / 1e9
+        if (n >= 0) rows(name) = n
         // queries are independent: drop their persisted intermediates so
         // cache pressure doesn't pollute the next measurement.
         // clearCache() clears the SQL cache ONLY — localCheckpoint
@@ -308,6 +314,12 @@ object Bench {
     val normTotal = total * normFactor
     val normJson = medians.map { case (k, v) => s"\"" + k + "\":" + f(v * normFactor) }
       .mkString("""{""", ",", "}")
+    // null for a query that threw in any iteration (its count is not
+    // a result)
+    val rowsJson = medians.map { case (k, _) =>
+      val n = if (failed(k)) None else rows.get(k)
+      s"\"" + k + "\":" + n.fold("null")(_.toString)
+    }.mkString("{", ",", "}")
     // env-derived strings ride raw into the JSON: escape them (the
     // Verify escaper's rule — an sfDir with a quote or backslash would
     // otherwise corrupt both artifacts; r17 review)
@@ -318,7 +330,7 @@ object Bench {
       case c => c.toString
     }
     val json =
-      s"""{"metric":"$metric","value":${f(total)},"unit":"sec","queries":$qs,"queries_steady":$steadyJson,"steady_total":${f(steadyTotal)},"warmed":$warm,"adjudication":"${jq(adjudication)}","iterations":$itersJson,"spread_max_over_min":$spread,"calibration_sec":${f(calibMed)},"calibration_iters":$calibJson,"calibration_end_sec":${f(calibEnd)},"calibration_ref":$CalibRef,"norm_factor":${f(normFactor)},"norm_total":${f(normTotal)},"queries_norm":$normJson,"sf":"${jq(sfDir)}","heap_gb":$heapGb,"host_mem_gb":$hostMemJson,"pin_exceeds_ram":$pinExceedsRam,"comparable_to":"${jq(comparableTo)}"$onlyMark$failedMark$retriedMark}"""
+      s"""{"metric":"$metric","value":${f(total)},"unit":"sec","queries":$qs,"queries_steady":$steadyJson,"steady_total":${f(steadyTotal)},"warmed":$warm,"adjudication":"${jq(adjudication)}","iterations":$itersJson,"spread_max_over_min":$spread,"calibration_sec":${f(calibMed)},"calibration_iters":$calibJson,"calibration_end_sec":${f(calibEnd)},"calibration_ref":$CalibRef,"norm_factor":${f(normFactor)},"norm_total":${f(normTotal)},"queries_norm":$normJson,"rows":$rowsJson,"sf":"${jq(sfDir)}","heap_gb":$heapGb,"host_mem_gb":$hostMemJson,"pin_exceeds_ram":$pinExceedsRam,"comparable_to":"${jq(comparableTo)}"$onlyMark$failedMark$retriedMark}"""
     // The launcher that captures this main's stdout keeps only the LAST
     // ~2000 characters; BENCH_r10/r11 show the full line (per-query
     // iteration arrays push it past 10 KB) arriving head-truncated and

@@ -457,9 +457,8 @@ object Curate {
     * ingest loop from nothing — derived THROUGH the operators' own
     * expressions from `docs.limit(0)`, so the store schemas can never
     * drift from what [[incrementalCurate]] appends. ONE definition:
-    * the q128/q129 driver queries and the scale-curve harness each
-    * built these by hand (r19 review — two
-    * sites with hand-typed `toDF` schemas, exactly the drift the
+    * the q128/q129 driver queries each built these by hand (r19
+    * review — hand-typed `toDF` schemas, exactly the drift the
     * derive-through-operators rule exists to prevent). Callers
     * `localCheckpoint()` the frames (in-session loop) or `writeBucketed`
     * them (durable tables).

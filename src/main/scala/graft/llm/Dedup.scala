@@ -1162,18 +1162,6 @@ object Dedup {
     * cluster-mode deployment that needs mid-job recovery should use
     * reliable `checkpoint` to a DFS instead).
     *
-    * @return (doc, component, is_keeper): component = min id reachable,
-    *         is_keeper = (doc == component).
-    */
-  def components(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
-                 maxIters: Int = 20, starAfter: Int = 5,
-                 smallGraph: Long = 200000L): DataFrame =
-    componentsImpl(pairs, idA, idB, maxIters, starAfter, smallGraph)._1
-
-  /** [[components]] plus its execution stats — (labels, propagation
-    * rounds run, whether it escalated to [[starContraction]]). The
-    * ScaleCurve harness charts rounds-vs-corpus-size from this.
-    *
     * `smallGraph`: when the DISTINCT symmetric edge list holds at most
     * this many rows (and ids are longs), components are computed
     * driver-side with union-find over the collected edges — the same
@@ -1181,14 +1169,17 @@ object Dedup {
     * 2·10⁵ edge rows ≈ 3 MB, while the iterative path costs
     * rounds × (join + aggregate + checkpoint) driver-scheduled jobs.
     * Labels are IDENTICAL (min-id component, property-tested against
-    * the distributed path); ≤ 0 disables the shortcut (the scale
-    * harness and the propagation/star-machinery specs force the
-    * distributed path this way). The threshold check is one count on
-    * the already-persisted edge frame the loop would scan anyway.
+    * the distributed path); ≤ 0 disables the shortcut (the
+    * propagation/star-machinery specs force the distributed path this
+    * way). The threshold check is one count on the already-persisted
+    * edge frame the loop would scan anyway.
+    *
+    * @return (doc, component, is_keeper): component = min id reachable,
+    *         is_keeper = (doc == component).
     */
-  private[graft] def componentsImpl(pairs: DataFrame, idA: String, idB: String,
-                                    maxIters: Int, starAfter: Int,
-                                    smallGraph: Long = 200000L): (DataFrame, Int, Boolean) = {
+  def components(pairs: DataFrame, idA: String = "id_a", idB: String = "id_b",
+                 maxIters: Int = 20, starAfter: Int = 5,
+                 smallGraph: Long = 200000L): DataFrame = {
     import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // symmetric closure via a map-side explode, NOT a self-union: the
     // incoming `pairs` is typically an expensive unpersisted plan (the
@@ -1229,8 +1220,8 @@ object Dedup {
         org.apache.spark.sql.types.StructField("doc", org.apache.spark.sql.types.LongType, nullable = false),
         org.apache.spark.sql.types.StructField("component", org.apache.spark.sql.types.LongType, nullable = false),
         org.apache.spark.sql.types.StructField("is_keeper", org.apache.spark.sql.types.BooleanType, nullable = false)))
-      return (pairs.sparkSession.createDataFrame(
-        pairs.sparkSession.sparkContext.parallelize(out, 1), schema), 0, false)
+      return pairs.sparkSession.createDataFrame(
+        pairs.sparkSession.sparkContext.parallelize(out, 1), schema)
     }
     // eager localCheckpoint per round: materializes the labels AND
     // truncates lineage — without it each round's plan embeds every
@@ -1257,9 +1248,8 @@ object Dedup {
       lab = nextChg.select(col("v"), col("lbl"))
       rounds += 1
     }
-    val escalated = changed != 0L
     val labeled =
-      if (!escalated) lab
+      if (changed == 0L) lab
       else {
         // diameter exceeds the propagation budget — escalate to the
         // round-logarithmic contraction rather than burning one round
@@ -1273,8 +1263,8 @@ object Dedup {
           .join(stars.select(col("a").as("v"), col("b").as("ctr")), Seq("v"), "left")
           .select(col("v"), coalesce(col("ctr"), col("v")).as("lbl"))
       }
-    (labeled.select(col("v").as("doc"), col("lbl").as("component"),
-      (col("v") === col("lbl")).as("is_keeper")), rounds, escalated)
+    labeled.select(col("v").as("doc"), col("lbl").as("component"),
+      (col("v") === col("lbl")).as("is_keeper"))
   }
 
   /** Alternating large-star/small-star connected components (Kiveris

@@ -44,7 +44,7 @@ object Retrieval {
     * The (doc,term,tf) frame is persisted ([[graft.dsl.Rel.track]])
     * because four plan branches read it: after materializing the
     * result, call `Rel.releaseTracked()` to free it (the repo-wide
-    * harness convention — Verify/Bench/ScaleCurve already do).
+    * harness convention — Verify and Bench already do).
     *
     * @param queries (qid int, term string) — one row per query term;
     *                must be small (it is broadcast).

@@ -51,7 +51,8 @@ import org.apache.spark.storage.StorageLevel
   *   - each new rank table is persisted, so lineage is one CACHED level
   *     deep, no exponential replay. check/leak materialize the whole
   *     chain in ONE action at the end (no per-round driver barrier —
-  *     r21: 5 count() jobs replaced by 1); redistribute materializes
+  *     r21: 5 count() jobs replaced by 1; the action is the last
+  *     round's eager localCheckpoint); redistribute materializes
   *     per round (its dangling-mass scalar reads the previous table)
   *     and unpersists eagerly, keeping ≤ 2 rank tables cached;
   *   - `redistribute` adds one scan of the persisted rank table per
@@ -152,10 +153,14 @@ object PageRank {
         .select(nodes("node"), nodes("dang"),
           (lit(teleport) +
             expr(s"(coalesce(insum, 0L) + ${dmPerNode}L) * 85 div 100")).as("r"))
-      // the LAST round always persists (the returned frame must stay
-      // readable after the checkpoint-id sweep below)
+      // the LAST lazy-chain round is an EAGER localCheckpoint: it is
+      // the ONE materializing action (every marked and persisted level
+      // below fills as it computes), and it cuts the returned frame's
+      // own lineage, so no later read of it needs the blocks the
+      // checkpoint-id sweep below deletes
       val next =
-        if (lazyChain && it % CutEvery == 0 && it < iterations) {
+        if (lazyChain && it == iterations) nextBase.localCheckpoint(eager = true)
+        else if (lazyChain && it % CutEvery == 0) {
           val before = sc.getPersistentRDDs.keySet
           val cut = nextBase.localCheckpoint(eager = false)
           ckptRddIds :::= (sc.getPersistentRDDs.keySet -- before).toList
@@ -170,7 +175,6 @@ object PageRank {
       ranks = next
     }
     if (lazyChain) {
-      ranks.count() // ONE materializing pass caches every level
       intermediates.foreach(_.unpersist())
       ckptRddIds.foreach(id =>
         sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))

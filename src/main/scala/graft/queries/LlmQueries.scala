@@ -1583,9 +1583,9 @@ object LlmQueries {
       val nQualityPass = hdr.getLong(1)
       val copyBase = if (hdr.isNullAt(2)) 1L else hdr.getLong(2) + 1L
       // empty bootstrap frames derived THROUGH the operators' own
-      // expressions (Curate.emptyStores — shared with q128 and the
-      // scale-curve harness), so the tables' schemas
-      // can never drift from what incrementalCurate appends
+      // expressions (Curate.emptyStores — shared with q128), so the
+      // tables' schemas can never drift from what incrementalCurate
+      // appends
       val d0 = d.limit(0)
       val (fp0, sig0, idx0) = graft.llm.Curate.emptyStores(d, "doc_id", "text")
       // a crash inside a previous iteration's compact would leave the

@@ -6,10 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * the table loader and the oracle-determinism decimal cast (they were
   * copy-pasted per object, so a change to the determinism contract
   * could silently apply to only some query groups; r17 review). */
-// private[graft] (was private[queries]): the scale-curve harness needs
-// copyBase too — its q119/q126 blocks were the LAST hardcoded +1e9
-// bases in the repo (r19 VERDICT task 2: at 256× scaled ids reach
-// ~2.55e9, so +1e9 copies ALIAS store ids)
+// private[graft] (was private[queries]): graft.QCommonSpec, which lives
+// in package graft, tests multisetEqual, parJobs and chainCorpus directly
 private[graft] object QCommon {
   def t(s: SparkSession, dir: String, name: String): DataFrame =
     graft.Tables.load(s, dir, name)

@@ -1,1293 +1,101 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import graft.{Graft, Tables}
-import graft.llm.{Curate, Dedup}
 
-/** Scale-evidence harness (VERDICT r7 item 1): runs the dedup/curation
-  * family — q31 minhash-LSH, q33 prefix-filtered n-gram Jaccard, q66
-  * decontamination, q69 curate — on 1×/4×/16×/64× multiplied corpora
-  * and prints one JSON line per (query, factor) with raw per-iteration
-  * times, medians, output rows, and (for the two quadratic-risk
-  * pipelines) per-stage wall times. SCALECURVE.md is authored from this
-  * output.
+/** Scale-curve fixture writer: an m× copy of an sf directory that
+  * `graft.Bench` times like any other (`SPARK_GRAFT_SF_DIR`), so a
+  * scale curve runs the shipped `SparkEntry` query bodies, not restated
+  * ones. `tools/scalecurve.sh` drives writer and Bench per factor;
+  * SCALECURVE.md records the curves.
   *
-  * Corpus multiplication: copy c (1 ≤ c < m) re-keys every WORD with a
-  * copy prefix `x{c}_`, so copies' shingle spaces are pairwise DISJOINT:
-  * no cross-copy near-duplicates, and exact-duplicate collapse cannot
-  * trivially absorb the growth (the r7 verdict's requirement). Each
-  * copy reproduces the base corpus's internal near-dup structure
-  * (word-consistent mutation preserves within-copy Jaccard), so
-  * duplicate DENSITY is constant while volume grows m× — the regime
-  * where a linear pipeline must produce a linear curve and any
-  * quadratic stage shows up as m² growth.
+  *   sbt "runMain graft.tools.ScaleCurve <baseDir> <outRoot> <m>"
+  *
+  * writes `<outRoot>/x<m>/` and prints its path (at m = 1, the base
+  * dir itself). The multiplied tables hold the base rows plus copies
+  * c = 1 … m-1:
+  *   - documents: every word re-keyed `x{c}_w`, so copies' shingle
+  *     spaces are pairwise DISJOINT — no cross-copy near-duplicates,
+  *     exact-duplicate collapse cannot absorb the growth, and each copy
+  *     keeps the base's internal near-dup structure (word-consistent
+  *     mutation preserves within-copy Jaccard). Duplicate density stays
+  *     constant while volume grows m×, so a linear pipeline draws a
+  *     linear curve and per-document outputs grow exactly m×.
+  *   - embeddings: a per-copy ±1 diagonal (sign from xxhash64(c, dim)
+  *     parity) — an isometry, so within-copy geometry is preserved
+  *     while copies land in different regions.
+  *   - events: user_id offset (disjoint per-user structure) and ts
+  *     shifted by c×(span+1 h), so time DENSITY is constant — range
+  *     and as-of joins would otherwise grow m² by construction.
+  * Ids move by c·[[IdStride]] and every other column passes through;
+  * a documents row whose `n_chars` equals `length(text)` keeps that
+  * relation under the re-keyed text. The TPC-H tables are symbolic
+  * links to the base files.
   */
 object ScaleCurve {
 
-  private def time[A](f: => A): (Double, A) = {
-    val t0 = System.nanoTime()
-    val r = f
-    ((System.nanoTime() - t0) / 1e9, r)
+  /** Per-copy id offset: a multiple of 20, so `doc_id % 20` (q33's
+    * block key) and `% 10` (`derivedDocs`' sampling) hold per copy. */
+  val IdStride = 10000000L
+
+  val multiplied: Seq[String] = Seq("documents", "embeddings", "events")
+
+  /** Copy c ≥ 1 of one multiplied table: the base columns in order,
+    * with `over`'s expressions in place of the columns they name. */
+  private def copyOf(base: DataFrame, over: Map[String, Column]): DataFrame =
+    base.select(base.columns.map(n => over.getOrElse(n, col(n)).as(n)).toSeq: _*)
+
+  private def offset(name: String, c: Int, stride: Long = IdStride): (String, Column) =
+    name -> (col(name) + c * stride)
+
+  private def copies(name: String, base: DataFrame, m: Int): DataFrame = {
+    val over: Int => Map[String, Column] = name match {
+      case "documents" => c =>
+        val text = concat_ws(" ",
+          transform(split(col("text"), " "), w => concat(lit(s"x${c}_"), w)))
+        Map(offset("doc_id", c), "text" -> text, "n_chars" ->
+          when(col("n_chars") <=> length(col("text")), length(text))
+            .otherwise(col("n_chars")))
+      case "embeddings" => c =>
+        Map(offset("vec_id", c), "embedding" -> transform(col("embedding"),
+          (x, i) => when(pmod(xxhash64(lit(c), i), lit(2)) === 0, x).otherwise(-x)))
+      case "events" =>
+        val b = base.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).head()
+        val shift = b.getLong(1) - b.getLong(0) + 3600000000L
+        c => Map(offset("event_id", c, 10 * IdStride), offset("user_id", c),
+          "ts" -> timestamp_micros(unix_micros(col("ts")) + c * shift))
+    }
+    (1 until m).map(c => copyOf(base, over(c))).foldLeft(base)(_ union _)
   }
 
-  private def fmt(v: Double) = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP)
-
-  /** m× corpus: original plus m-1 word-prefixed copies (disjoint
-    * shingle spaces — see object doc). doc_id offset keeps ids unique
-    * AND preserves doc_id % 20 (q33's blocking key) per copy.
-    */
-  private def multiply(base: DataFrame, m: Int): DataFrame =
-    (1 until m).map { c =>
-      base.select((col("doc_id") + c.toLong * 10000000L).as("doc_id"),
-        col("source"),
-        concat_ws(" ", transform(split(col("text"), " "),
-          w => concat(lit(s"x${c}_"), w))).as("text"))
-    }.foldLeft(base)(_ union _)
+  /** Write `<outRoot>/x<m>/` from `baseDir` and return its path; at
+    * m = 1 nothing is written and `baseDir` is returned. */
+  def write(spark: SparkSession, baseDir: String, outRoot: String, m: Int): String = {
+    require(m >= 1, s"factor must be >= 1, got $m")
+    if (m == 1) return baseDir
+    val out = Paths.get(outRoot, s"x$m").toAbsolutePath
+    Files.createDirectories(out)
+    for (name <- Tables.all) {
+      val target = out.resolve(s"$name.parquet")
+      if (multiplied.contains(name))
+        copies(name, Tables.load(spark, baseDir, name), m)
+          .write.mode("overwrite").parquet(target.toString)
+      else {
+        Files.deleteIfExists(target)
+        Files.createSymbolicLink(target,
+          Paths.get(baseDir, s"$name.parquet").toAbsolutePath)
+      }
+    }
+    out.toString
+  }
 
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val factors = sys.env.getOrElse("SPARK_GRAFT_SCALE_FACTORS", "1,4,16,64")
-      .split(',').map(_.trim.toInt).toSeq
-    val iters = sys.env.getOrElse("SPARK_GRAFT_SCALE_ITERS", "3").toInt
-    // at a real cluster shuffle partitions scale with the data; the
-    // local default (= cpus) deliberately under-partitions big factors,
-    // so the knob lets a probe run separate "more data per partition"
-    // from "more data" (see SCALECURVE.md)
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus.toString)
-    val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY").map(_.split(',').toSeq)
-    val spark = Graft.localSession(cpus, "scale-curve")
-    spark.conf.set("spark.sql.shuffle.partitions", shuffleParts)
-    spark.sparkContext.setLogLevel("WARN")
-    val base0 = Tables.load(spark, dir, "documents")
-      .select(col("doc_id"), col("source"), col("text"))
-    val embBase = Tables.load(spark, dir, "embeddings")
-      .select(col("vec_id"), col("embedding"))
-    spark.range(1000000).selectExpr("sum(id)").collect() // JIT warmup
-
-    val out = new StringBuilder
-
-    for (m <- factors) {
-      // materialize the multiplied corpus once per factor so corpus
-      // construction isn't charged to the queries
-      val docs = multiply(base0, m)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nDocs = docs.count()
-
-      // ONE multiplied-embeddings definition (r20 review: five blocks
-      // — q79/q80/q92-93/q98/q132 — hand-copied the same id-offset +
-      // xxhash64 sign-flip + union + persist; a formula fix must land
-      // once). Returns the persisted, materialized frame; each block
-      // unpersists its own copy when done.
-      def multiplyEmb(): org.apache.spark.sql.DataFrame = {
-        val emb = (1 until m).map { c =>
-          embBase.select((col("vec_id") + c.toLong * 10000000L).as("vec_id"),
-            transform(col("embedding"), (x, i) =>
-              when(pmod(xxhash64(lit(c), i), lit(2)) === 0, x).otherwise(-x))
-              .as("embedding"))
-        }.foldLeft(embBase)(_ union _)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        emb.count()
-        emb
-      }
-
-      def report(q: String, run: () => Long,
-                 stages: () => Seq[(String, Double, Long)] = () => Nil,
-                 postIter: () => Unit = () => ()): Unit = {
-        if (!only.forall(_.exists(q.startsWith))) return
-        val timesRows = (1 to iters).map { _ =>
-          val (dt, rows) = time(run())
-          graft.dsl.Rel.releaseTracked()
-          postIter() // untimed per-iteration cleanup (e.g. q128's
-                     // localCheckpoint blocks — invisible to
-                     // releaseTracked, the r18 Bench sweep finding)
-          (dt, rows)
-        }
-        val med = timesRows.map(_._1).sorted.apply(iters / 2)
-        val st = stages()
-        graft.dsl.Rel.releaseTracked()
-        val stJson =
-          if (st.isEmpty) ""
-          else st.map { case (n, t, r) => s""""$n":{"sec":${fmt(t)},"rows":$r}""" }
-            .mkString(""","stages":{""", ",", "}")
-        val line =
-          s"""{"q":"$q","factor":$m,"n_docs":$nDocs,"median_sec":${fmt(med)},""" +
-          s""""iterations":[${timesRows.map(t => fmt(t._1)).mkString(",")}],""" +
-          s""""out_rows":${timesRows.head._2}$stJson}"""
-        println("SCALE " + line)
-        out.append(line).append('\n')
-      }
-
-      // ---- q31: minhash-LSH near-dup pairs (t2 parameters) ----
-      report("q31_minhash_lsh", () =>
-        Dedup.minhashLsh(docs, "doc_id", "text",
-          shingleK = 3, numHashes = 64, bands = 32, threshold = 0.6).count(),
-        stages = () => minhashStages(spark, docs))
-
-      // ---- q33: prefix-filtered n-gram Jaccard (t2 parameters) ----
-      val blocked = docs.withColumn("blk", pmod(col("doc_id"), lit(20)))
-      report("q33_ngram_jaccard", () =>
-        Dedup.ngramJaccard(blocked, "doc_id", "text", "blk",
-          k = 3, minJaccard = 0.3).count(),
-        stages = () => ngramStages(spark, blocked))
-
-      // ---- q66: benchmark decontamination (t2 derivation) ----
-      val bench = docs.filter(pmod(col("doc_id"), lit(25)) === 0)
-        .select(concat_ws(" ",
-          slice(split(col("text"), " "), 1, 12)).as("excerpt"))
-      report("q66_decontaminate", () =>
-        Dedup.contamination(docs, "doc_id", "text", bench, "excerpt", k = 8)
-          .count())
-
-      // ---- q107: global sentence-level exact dedup (r14) ----
-      // copies' word spaces are disjoint, so cross-copy sentences never
-      // collide: duplicate density constant, volume m× — the curve must
-      // stay linear (one struct-min agg + join-back + reassembly)
-      report("q107_sentence_dedup", () =>
-        Dedup.sentenceDedup(docs, "doc_id", "text").count())
-
-      // ---- q115: exact duplicated-span dedup (r15) ----
-      // disjoint per-copy word spaces: cross-copy grams never collide,
-      // so duplicated-span density is constant while gram volume grows
-      // m× — the curve must track the gram kernel scan + ONE struct-min
-      // agg + join-back (the q107 shape at window rather than sentence
-      // grain; rewrite is per-row array math)
-      report("q115_span_dedup", () =>
-        Dedup.spanDedup(docs, "doc_id", "text", k = 8).count())
-
-      // ---- q116: BPE train + encode (r15) ----
-      // training collects the maxWords-capped dict regardless of m (the
-      // model-sized rule); the distributed encode is the corpus-linear
-      // term — the curve must track the scan. Returned metric = total
-      // subword tokens (must grow exactly with the corpus).
-      report("q116_bpe_encode", () => {
-        val merges = graft.llm.Bpe.train(docs, "text", numMerges = 200)
-        graft.llm.Bpe.encode(docs, "doc_id", "text", merges)
-          .agg(sum(col("n_tokens"))).head().getLong(0)
-      })
-
-      // ---- q111: Misra-Gries heavy hitters (r14) ----
-      // per-copy word prefixes make vocab grow m x while each copy's
-      // internal skew repeats: the sketch buffer stays at `capacity`
-      // per task regardless, so the curve must track the explode scan
-      report("q111_heavy_hitters", () => {
-        val words = docs.select(explode(split(col("text"), " ")).as("k"))
-          .filter(col("k") =!= "")
-        words.agg(graft.ops.HeavyHitters.heavyHitters(64)(col("k")).as("hh"))
-          .selectExpr("size(hh) AS n").head().getInt(0).toLong
-      })
-
-      // ---- q117: Count-Min sketch build + probe (r16) ----
-      // the grid is 4x2048 longs regardless of m: the curve must track
-      // the explode scan + map-side partial merge (state per task is
-      // constant). Returned metric = estimate mass of 20 probes.
-      report("q117_count_min", () => {
-        val words = docs.select(explode(split(col("text"), " ")).as("k"))
-          .filter(col("k") =!= "")
-        val sk = graft.ops.CountMin.sketch(words, col("k"))
-        val probes = words.limit(20)
-        probes.crossJoin(org.apache.spark.sql.functions.broadcast(sk))
-          .select(graft.ops.CountMin.estimate(col("cm"), col("k")).as("e"))
-          .agg(sum(col("e"))).head().getLong(0)
-      })
-
-      // ---- q118: classifier train + score (r16) ----
-      // featurize is the corpus-linear term; each of the 6 GD passes
-      // scans the persisted featurized frame and collects <= dim+2
-      // rows — the curve must track featurize + iters x feat-scan,
-      // with driver work constant (model-sized). Label re-derived from
-      // the multiplied text: copy c's words carry the x{c}_ prefix, so
-      // the positive token must match ANY copy's form (bare `spark` or
-      // `x\d+_spark`) — per-copy class balance then holds at every
-      // factor, not just m<=2.
-      report("q118_classifier", () => {
-        val labeled = docs.select(col("doc_id"), col("text"),
-          exists(split(col("text"), " "),
-            w => w === "spark" || w.rlike("^x[0-9]+_spark$"))
-            .cast("int").as("label"))
-        val mdl = graft.llm.Classifier.trainLogReg(
-          labeled, "doc_id", "text", "label", dim = 512, iters = 6)
-        graft.llm.Classifier.score(labeled, "doc_id", "text", mdl)
-          .filter(col("score") >= 0.5).count()
-      })
-
-      // ---- q119: incremental LSH near-dedup vs signature store (r16) ----
-      // store = even ids' signatures, batch = odd ids + re-ingested
-      // evens (the q109 split, at every factor): store-side work is
-      // one band derivation + bucket agg over m-proportional
-      // signatures; batch side likewise — the curve must stay linear
-      // while candidate verification stays bounded by bucket caps.
-      // The store is built and PERSISTED outside the timed region —
-      // the operator's contract (a store is a materialized table from
-      // previous ingests, not a lineage). The r17 stage-profile
-      // finding (SCALECURVE.md §q119 incremental LSH): an
-      // un-persisted derived store is evaluated by BOTH
-      // store-side consumers inside the op, and whether AQE reuses
-      // that exchange is plan luck — iterations swung 23 s ↔ 183 s at
-      // 64× on exactly that flip; with the store persisted the same
-      // iterations sit flat at 17–19 s.
-      if (only.forall(p => p.exists("q119_incremental_lsh".startsWith) ||
-          p.exists("q127_incremental_lsh_indexed".startsWith))) {
-        val evens = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
-        val store119 = Dedup.minhashSignatures(evens, "doc_id", "text")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        store119.count()
-        // copy-id base DERIVED from the scaled corpus (QCommon.copyBase —
-        // the single definition; r20): the old hardcoded +1e9 ALIASED
-        // copy ids with store ids at 256×, where scaled ids reach ~2.55e9
-        val cb119 = graft.queries.QCommon.copyBase(docs, "doc_id")
-        val batch = docs.select(col("doc_id"), col("text"))
-          .filter(pmod(col("doc_id"), lit(2)) === 1)
-          .unionByName(evens.select(
-            (col("doc_id") + cb119).as("doc_id"), col("text")))
-        report("q119_incremental_lsh", () =>
-          Dedup.lshIncremental(batch, "doc_id", "text", store119).count())
-        // ---- q127: the same ingest via the pre-built band index ----
-        // index built+persisted OUTSIDE the timed region (at real scale
-        // it is a bucketed table maintained by the ingest loop): the
-        // store-side per-batch band derivation disappears — the curve
-        // must sit at-or-below q119's at every factor, same admit rows.
-        val idx127 = Dedup.lshBandIndex(store119)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        idx127.count()
-        report("q127_incremental_lsh_indexed", () =>
-          Dedup.lshIncrementalIndexed(batch, "doc_id", "text",
-            store119, idx127).count())
-        idx127.unpersist(blocking = false)
-        store119.unpersist(blocking = false)
-      }
-
-      // ---- q128: the 3-round ingest LOOP (r19, VERDICT r18 task 6) ----
-      // stores START EMPTY and grow by each round's admits (fp, sig,
-      // band index — three appends per round, localCheckpoint per
-      // append, the q128 lineage discipline). The per-round "stages"
-      // (recorded from the last timed iteration, no extra pass) pin
-      // the property the incremental design exists for: per-batch cost
-      // must stay flat-ish as the store grows round over round, and
-      // the loop total must scale linearly in m — a store×batch
-      // interaction would show as super-linear growth AND rising
-      // rounds. localCheckpoint blocks are swept per iteration (they
-      // are invisible to releaseTracked — the r18 Bench finding; the
-      // docs fixture's own persist is spared via an id snapshot).
-      // ONE loop body for the q128 (default mode) and q130
-      // (split-invariant mode) curve blocks — they differ ONLY in the
-      // admit mode (the r19 review's single-definition rule: a
-      // hand-mirrored copy could silently price a different loop than
-      // the driver query). Empty stores derive through Curate.emptyStores
-      // (one schema definition with the driver queries). In
-      // split-invariant mode fp rows append for ADMITTED reps only
-      // while sig + index rows append for EVERY seen rep (the Curate
-      // scaladoc contract).
-      def inSessionLoopCurve(q: String, splitInv: Boolean): Unit =
-        if (only.forall(_.exists(q.startsWith))) {
-          val fixtureIds = spark.sparkContext.getPersistentRDDs.keySet
-          var lastRounds: Seq[(String, Double, Long)] = Nil
-          report(q, () => {
-            val (fp0, sig0, idx0) = Curate.emptyStores(
-              docs.select(col("doc_id"), col("text")), "doc_id", "text")
-            // r21 store discipline (mirrors the driver query): ONE
-            // localCheckpoint per round — the result frame
-            // — with the stores as lazy unions of its flat delta
-            // projections, instead of three full-store
-            // re-materializations per round
-            var fpStore: org.apache.spark.sql.DataFrame = fp0
-            var sigStore: org.apache.spark.sql.DataFrame = sig0
-            var bandIdx: org.apache.spark.sql.DataFrame = idx0
-            var total = 0L
-            val rounds = Seq.newBuilder[(String, Double, Long)]
-            for (i <- 0 until 3) {
-              val batch = docs.select(col("doc_id"), col("text"))
-                .filter(pmod(col("doc_id"), lit(3)) === i)
-              val (dt, n) = time {
-                val res = Curate.incrementalCurate(batch, "doc_id", "text",
-                    fpStore, sigStore, bandIndex = Some(bandIdx),
-                    splitInvariant = splitInv)
-                  .localCheckpoint()
-                val adm = if (splitInv) res.filter(col("admitted")) else res
-                val n0 = adm.count()
-                val sigSrc = if (splitInv) res else adm
-                fpStore = fpStore
-                  .unionByName(adm.select(col("fp_a"), col("fp_b")))
-                sigStore = sigStore
-                  .unionByName(sigSrc.select(col("id"), col("sig")))
-                bandIdx = bandIdx.unionByName(
-                  Dedup.lshBandIndex(sigSrc.select(col("id"), col("sig"))))
-                n0
-              }
-              rounds += ((s"round$i", dt, n))
-              total += n
-            }
-            lastRounds = rounds.result()
-            total
-          }, stages = () => lastRounds,
-            postIter = () =>
-              spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-                if (!fixtureIds.contains(id)) rdd.unpersist(false)
-              })
-        }
-      inSessionLoopCurve("q128_ingest_loop", splitInv = false)
-
-      // ---- shared durable-loop round driver (q129 + the r20 cadence
-      // variants — ONE body, the single-definition rule): bootstrap
-      // empty bucketed TABLES, then R rounds of curate-against-tables +
-      // three appendBucketed writes; `compactEvery > 0` additionally
-      // compacts ALL THREE stores after every such round (timed
-      // separately from the ingest). Emits per-round stage rows:
-      //   (roundN, ingest sec, admits)
-      //   (filesN, compact sec — 0 when uncadenced, TOTAL store
-      //    parquet files at round end)
-      // Admit frames are localCheckpoint'd (the appendBucketed RMW
-      // hazard); callers sweep their blocks per iteration like q128's.
-      // bootstrapStores: ONE (fp, sig, idx) bucketed-table bootstrap
-      // for every durable block (durableLoop + the q131 streaming-body
-      // block) — schemas derive through Curate.emptyStores, never
-      // hand-typed (the r19 single-definition rule).
-      def bootstrapStores(tabs: Seq[String], b: Int): Unit = {
-        val (fp0, sig0, idx0) = Curate.emptyStores(
-          docs.select(col("doc_id"), col("text")), "doc_id", "text")
-        tabs.zip(Seq((fp0, Seq("fp_a")), (sig0, Seq("id")), (idx0, Seq("band", "key"))))
-          .foreach { case (tn, (df0, keys)) =>
-            graft.ops.Bucketed.writeBucketed(df0, tn, keys, b) }
-      }
-      def durableLoop(tabs: Seq[String], b: Int, r: Int, compactEvery: Int,
-                      rounds: scala.collection.mutable.Builder[
-                        (String, Double, Long), Seq[(String, Double, Long)]]): Long = {
-        val Seq(fpT, sigT, idxT) = tabs
-        // a crash inside a previous run's compact leaves the
-        // _compacting sibling behind; unlike the main tables (which
-        // writeBucketed drops) nothing below recreates it, so every
-        // rerun of the sweep would fail loudly inside compact until
-        // someone drops it by hand (r19 review — the q129 driver
-        // query already carries this pre-drop)
-        tabs.foreach(tn => spark.sql(s"DROP TABLE IF EXISTS ${tn}_compacting"))
-        bootstrapStores(tabs, b)
-        def nFiles: Long = tabs.map { tn =>
-          val loc = new org.apache.hadoop.fs.Path(
-            spark.sessionState.catalog.getTableMetadata(
-              spark.sessionState.sqlParser.parseTableIdentifier(tn)).location)
-          val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.listStatus(loc).count(st =>
-            st.isFile && st.getPath.getName.endsWith(".parquet")).toLong
-        }.sum
-        var total = 0L
-        for (i <- 0 until r) {
-          val batch = docs.select(col("doc_id"), col("text"))
-            .filter(pmod(col("doc_id"), lit(r)) === i)
-          val (dt, n) = time {
-            val adm = Curate.incrementalCurate(batch, "doc_id", "text",
-                spark.table(fpT), spark.table(sigT),
-                bandIndex = Some(spark.table(idxT)))
-              .localCheckpoint()
-            val n0 = adm.count()
-            graft.ops.Bucketed.appendBucketed(
-              adm.select(col("fp_a"), col("fp_b")), fpT, Seq("fp_a"), b)
-            graft.ops.Bucketed.appendBucketed(
-              adm.select(col("id"), col("sig")), sigT, Seq("id"), b)
-            graft.ops.Bucketed.appendBucketed(
-              Dedup.lshBandIndex(adm.select(col("id"), col("sig"))),
-              idxT, Seq("band", "key"), b)
-            n0
-          }
-          val ct = if (compactEvery > 0 && (i + 1) % compactEvery == 0)
-            time(tabs.foreach(graft.ops.Bucketed.compact(spark, _)))._1
-          else 0.0
-          rounds += ((s"round$i", dt, n))
-          rounds += ((s"files$i", ct, nFiles))
-          total += n
-        }
-        total
-      }
-
-      // ---- q129: the DURABLE-table twin of the q128 loop (r19) ----
-      // same 3 rounds, but the stores live as bucketed TABLES appended
-      // via appendBucketed — the per-round stage timings additionally
-      // price the real table I/O AND the growing per-bucket file count
-      // (round i reads a store holding i file sets per bucket); the
-      // final stage times Bucketed.compact on the appended index — the
-      // scheduled-maintenance cost as a function of store size.
-      if (only.forall(_.exists("q129_ingest_loop_tables".startsWith))) {
-        val fixtureIds = spark.sparkContext.getPersistentRDDs.keySet
-        var lastRounds: Seq[(String, Double, Long)] = Nil
-        val tabs = Seq("zsc129_fp", "zsc129_sig", "zsc129_idx")
-        report("q129_ingest_loop_tables", () => {
-          val rounds = Seq.newBuilder[(String, Double, Long)]
-          val total = durableLoop(tabs, 4, 3, compactEvery = 0, rounds)
-          val (ct, cRows) = time {
-            graft.ops.Bucketed.compact(spark, "zsc129_idx")
-            spark.table("zsc129_idx").count()
-          }
-          rounds += (("compact_idx", ct, cRows))
-          lastRounds = rounds.result()
-          total
-        }, stages = () => lastRounds,
-          postIter = () =>
-            spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-              if (!fixtureIds.contains(id)) rdd.unpersist(false)
-            })
-        tabs.foreach(tn => spark.sql(s"DROP TABLE IF EXISTS $tn"))
-      }
-
-      // ---- q131: the STREAMING foreachBatch body (r20) — the q129
-      // durable loop driven through Curate.ingestBatch, i.e. with the
-      // per-trigger extras streamingIngest adds on top of the bare
-      // loop: the ledger no-op probe and ledger append (one-row table
-      // ops) and per-batch manifest validation. The delta vs the q129
-      // rows at the same factor IS the streaming machinery's cost —
-      // measured, not asserted. Per-round admits counted through the
-      // onAdmitted callback (the realistic delivery path).
-      // Opt-in (only.exists, the cadence-block gating — r20 ADVICE): 3
-      // ingest rounds with full store bootstrap per iteration
-      // measurably lengthen every DEFAULT sweep at high factors, and
-      // the machinery-vs-bare-loop delta only needs measuring when
-      // asked for.
-      if (only.exists(_.exists(p =>
-          p.startsWith("q131") || "q131_streaming_body".startsWith(p)))) {
-        val fixtureIds = spark.sparkContext.getPersistentRDDs.keySet
-        var lastRounds: Seq[(String, Double, Long)] = Nil
-        val tabs = Seq("zsc131_fp", "zsc131_sig", "zsc131_idx")
-        report("q131_streaming_body", () => {
-          // no _compacting pre-drop: this block never calls compact
-          bootstrapStores(tabs, 4)
-          spark.sql("DROP TABLE IF EXISTS zsc131_man")
-          Dedup.lshManifest(spark).write.format("parquet").saveAsTable("zsc131_man")
-          spark.sql("DROP TABLE IF EXISTS zsc131_led")
-          val rounds = Seq.newBuilder[(String, Double, Long)]
-          var total = 0L
-          for (i <- 0 until 3) {
-            val batch = docs.select(col("doc_id"), col("text"))
-              .filter(pmod(col("doc_id"), lit(3)) === i)
-            var n = 0L
-            val (dt, _) = time {
-              Curate.ingestBatch(batch, i.toLong, "doc_id", "text",
-                "zsc131_fp", "zsc131_sig", "zsc131_idx", 4,
-                manifestTable = Some("zsc131_man"),
-                ledgerTable = Some("zsc131_led"),
-                onAdmitted = (df, _) => n = df.count())
-              n
-            }
-            rounds += ((s"round$i", dt, n))
-            total += n
-          }
-          lastRounds = rounds.result()
-          total
-        }, stages = () => lastRounds,
-          postIter = () =>
-            spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-              if (!fixtureIds.contains(id)) rdd.unpersist(false)
-            })
-        (tabs ++ Seq("zsc131_man", "zsc131_led"))
-          .foreach(tn => spark.sql(s"DROP TABLE IF EXISTS $tn"))
-      }
-
-      // ---- q129 compaction-cadence experiment (r20, VERDICT task 3):
-      // the file-accumulation cost the 3-round curve can't see. R
-      // rounds (default 12, SPARK_GRAFT_CADENCE_ROUNDS) of the durable
-      // loop, as TWO opt-in variants — never compact vs compact all
-      // three stores every round. The never variant's round i reads i
-      // file sets per bucket (i sorted runs to merge per bucket); the
-      // cadenced variant pays compact (one read + one write of each
-      // store) to keep every round reading one. Per-round ingest sec,
-      // compact sec and total store file count all land in the stage
-      // rows — the signal is the round-over-round TREND within one
-      // run, so these are meaningful at SPARK_GRAFT_SCALE_ITERS=1.
-      // Opt-in (only.exists, not forall): 2×R rounds at 256× is too
-      // expensive for the default sweep. The prefix must name the
-      // cadence family UNAMBIGUOUSLY — "q129" alone selects the plain
-      // loop, not hours of cadence rounds too (r20 review): a prefix
-      // that also matches q129_ingest_loop_tables is rejected here.
-      for ((q, every) <- Seq(("q129_cadence_never", 0), ("q129_cadence_every", 1)))
-        if (only.exists(_.exists(p =>
-            q.startsWith(p) && !"q129_ingest_loop_tables".startsWith(p)))) {
-          val r = sys.env.getOrElse("SPARK_GRAFT_CADENCE_ROUNDS", "12").toInt
-          val fixtureIds = spark.sparkContext.getPersistentRDDs.keySet
-          var lastRounds: Seq[(String, Double, Long)] = Nil
-          val tabs = Seq("zscad_fp", "zscad_sig", "zscad_idx")
-          report(q, () => {
-            val rounds = Seq.newBuilder[(String, Double, Long)]
-            val total = durableLoop(tabs, 4, r, compactEvery = every, rounds)
-            lastRounds = rounds.result()
-            total
-          }, stages = () => lastRounds,
-            postIter = () =>
-              spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-                if (!fixtureIds.contains(id)) rdd.unpersist(false)
-              })
-          tabs.foreach(tn => spark.sql(s"DROP TABLE IF EXISTS $tn"))
-        }
-
-      // ---- q130: the SPLIT-INVARIANT-mode twin of the q128 loop (r19)
-      // same 3 batches and scheme, the shared loop body above with the
-      // mode flipped — the signature store and band index grow with
-      // SEEN reps (admits + near-dup rejects) instead of admits only,
-      // which is the mode's entire cost story. The curve pins that the
-      // per-round cost stays flat-ish and the loop linear at the mode's
-      // bounded store-growth premium over the q128 rows (the planted-
-      // chain SEMANTICS are q130's driver-query job, not a scale
-      // question — this measures the production-shaped ingest).
-      inSessionLoopCurve("q130_split_invariant_ingest", splitInv = true)
-
-      // ---- q120: KLL quantile sketch build + merge + read (r16) ----
-      // per-source sketches over length(text), re-merged to global, 5
-      // quantile reads: buffer is O(k·log n) per task regardless of m —
-      // the curve must track the scan + map-side partial merge.
-      // Returned metric = total weight (must equal n_docs exactly).
-      report("q120_quantile_sketch", () => {
-        val perGroup = graft.ops.QuantileSketch.sketchBy(
-          docs, Seq("source"), length(col("text")))
-        val global = graft.ops.QuantileSketch.mergeSketches(perGroup, Nil)
-        global.select(
-            graft.ops.QuantileSketch.totalWeight(col("kll")).as("tw"),
-            graft.ops.QuantileSketch.quantile(col("kll"), 0.5).as("med"))
-          .head().getLong(0)
-      })
-
-      // ---- q121: BM25 ranked retrieval (r16) ----
-      // the fixed 4-query workload matches only copy-0 terms (copies
-      // prefix every word), but tf/dl/stats aggregate the WHOLE corpus:
-      // the curve must track the tokenize + tf aggregation, with the
-      // postings join constant-size. Returned metric = hit count.
-      report("q121_bm25", () => {
-        val workload = Seq(
-          (1, "table"), (1, "scan"), (1, "filter"),
-          (2, "group"), (2, "agg"), (2, "value"),
-          (3, "join"), (3, "key"), (3, "hash"),
-          (4, "stream"), (4, "window"), (4, "batch"))
-        import spark.implicits._
-        graft.llm.Retrieval.bm25TopK(docs, "doc_id", "text",
-          workload.toDF("qid", "term"), k = 10).count()
-      })
-
-      // ---- q122: PageRank over the bipartite doc-word graph (r16) ----
-      // nodes and edges both grow m×, degree distribution constant per
-      // copy: each of the 3 damped rounds is one join + one agg over
-      // m-proportional edges — the curve must be linear with a slope
-      // ~3× the edge-scan cost. Returned metric = node count.
-      report("q122_pagerank", () => {
-        val pairs = docs
-          .select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
-          .select(xxhash64(concat(lit("d"), col("doc_id"))).as("src"),
-            xxhash64(concat(lit("w"), col("word"))).as("dst"))
-          .distinct()
-        val edges = pairs.union(
-          pairs.select(col("dst").as("src"), col("src").as("dst")))
-        graft.ops.PageRank.ranks(edges, iterations = 3).count()
-      })
-
-      // ---- q123: Efraimidis-Spirakis weighted sample (r16) ----
-      // one key scan + bounded TopKAgg: O(k·partitions) state — the
-      // curve must track the scan alone. Returned metric = sample size.
-      report("q123_weighted_sample", () =>
-        graft.llm.Text.weightedSample(
-          docs.withColumn("w", length(col("text"))), "doc_id", "w", 200)
-          .count())
-
-      // ---- q124: Unicode canonicalization kernel (r16) ----
-      // pure per-row codegen'd column math over the salted corpus —
-      // the curve IS the scan. Returned metric = distinct normalized
-      // fingerprints (dedup-key cardinality).
-      report("q124_normalize", () =>
-        docs.select(graft.llm.Text.fingerprint(graft.llm.Text.normalize(
-            concat(lit("  Fast-Track CAFÉ\t"), col("text"),
-              lit("  Déjà  Vu  ")))).as("fp"))
-          .distinct().count())
-
-      // ---- q125: tokenizer-aware sequence packing capstone (r17) ----
-      // merges train ONCE per factor, OUTSIDE the timed region (r17
-      // ADVICE: train inside the report() closure charged a full
-      // corpus word-count aggregation to every timed iteration,
-      // contradicting this comment and the train-excluded
-      // decomposition in SCALECURVE.md §q125 token-pack); the timed
-      // region is chunk scan + codegen'd BPE
-      // tokenCount + 2-pass prefix sum + bin assignment — every term
-      // corpus-linear. Returned metric = bin count (token mass grows
-      // m×, so bins must too).
-      if (only.forall(_.exists("q125_token_pack".startsWith))) {
-        val merges125 = graft.llm.Bpe.train(docs, "text", numMerges = 200)
-        report("q125_token_pack", () =>
-          Curate.tokenPack(docs, "doc_id", "text", merges125)
-            .agg(countDistinct(col("bin")).as("n")).head().getLong(0))
-      }
-
-      // ---- q126: incremental-ingest curation capstone (r17) ----
-      // stores = even ids (fingerprints + signatures), batch = odd ids
-      // + re-ingested evens — the q119 split at every factor. Both
-      // stores are built and PERSISTED outside the timed region (the
-      // operator contract: a store is a materialized table from
-      // previous ingests — the q119 bimodality finding). Timed region
-      // = quality gate + exact-store anti-join + signature-store
-      // near-dedup, all batch-or-store-scan linear in m; candidate
-      // verification stays bounded by bucket caps. Returned metric =
-      // admitted count (must grow ~linearly: constant quality/dup
-      // rates per copy).
-      if (only.forall(_.exists("q126_incremental_curate".startsWith))) {
-        val evens126 = docs.select(col("doc_id"), col("text"))
-          .filter(pmod(col("doc_id"), lit(2)) === 0)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val fpStore126 = evens126.select(
-            xxhash64(col("text")).as("fp_a"),
-            xxhash64(lit("graft-fp2"), col("text")).as("fp_b"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val sigStore126 = Dedup.minhashSignatures(evens126, "doc_id", "text")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        fpStore126.count(); sigStore126.count()
-        // derived copy-id base (same r20 fix as the q119 block above)
-        val cb126 = graft.queries.QCommon.copyBase(docs, "doc_id")
-        val batchReal = docs.select(col("doc_id"), col("text"))
-          .filter(pmod(col("doc_id"), lit(2)) === 1)
-          .unionByName(evens126.select(
-            (col("doc_id") + cb126).as("doc_id"), col("text")))
-        report("q126_incremental_curate", () =>
-          Curate.incrementalCurate(batchReal, "doc_id", "text",
-            fpStore126, sigStore126).count())
-        evens126.unpersist(blocking = false)
-        fpStore126.unpersist(blocking = false)
-        sigStore126.unpersist(blocking = false)
-      }
-
-      // ---- q69: curation capstone (t2 parameters) ----
-      report("q69_curate", () =>
-        Curate.curate(docs, "doc_id", "text", "source").count(),
-        stages = () => curateStages(docs))
-
-      // ---- q77: connected components over the near-dup pair graph ----
-      // pair generation is q31's already-curved pipeline, so the pairs
-      // are materialized once OUTSIDE the timed region: the q77 curve
-      // charges only the clustering itself. The interesting axis is
-      // round count vs corpus size — constant duplicate density should
-      // keep cluster diameter (and so rounds) FLAT while volume grows.
-      if (only.forall(_.exists("q77_components".startsWith))) {
-        val pairs77 = Dedup.minhashLsh(docs, "doc_id", "text",
-            shingleK = 3, numHashes = 64, bands = 32, threshold = 0.6)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        pairs77.count()
-        // smallGraph=0: the curve's purpose is the DISTRIBUTED
-        // machinery; the driver shortcut would absorb every factor here
-        report("q77_components", () =>
-          Dedup.components(pairs77, smallGraph = 0L).count(),
-          stages = () => componentStages(pairs77))
-        pairs77.unpersist(blocking = false)
-      }
-
-      // ---- q79: embedding near-dup, multi-table LSH ----
-      // multiplied embeddings: copy c applies a deterministic per-copy
-      // ±1 diagonal (sign from xxhash64(c, dim) parity). Within-copy
-      // cosines are EXACTLY preserved (same diagonal on both sides),
-      // cross-copy dot products decorrelate — constant near-dup
-      // density, volume ×m, the same regime as the text corpora above.
-      // Two measurements per factor:
-      //  * candidate VOLUME (Σ n_b·(n_b−1)/2 over buckets, an exact
-      //    count-aggregation — no pair materialization) under FIXED
-      //    planes vs planes SCALED with the corpus (+2 per 4× step ⇒
-      //    4× more cells per step). Fixed planes must show ~m² volume;
-      //    scaled planes must hold it ~linear — the documented reason
-      //    `planes` is a function of corpus size.
-      //  * the real operator end-to-end at scaled planes (tables=3).
-      if (only.forall(_.exists(p => p.startsWith("q79") || "q79".startsWith(p)))) {
-        val emb = multiplyEmb()
-        // floor(log2(m)) — numberOfTrailingZeros would silently return 0
-        // for any odd user-supplied factor and mislabel the scaled curves
-        val log2m = 31 - Integer.numberOfLeadingZeros(math.max(m, 1))
-        val scaledPlanes = 8 + log2m // +2 per 4× step: 8/10/12/14
-        report("q79_cand_volume_fixed8", () => candVolume(emb, 8, 3))
-        report("q79_cand_volume_scaled2", () => candVolume(emb, scaledPlanes, 3))
-        // correlated embeddings skew the buckets, so collision prob
-        // declines slower than cell count grows — +4 planes per step
-        // shows the knob has the headroom to hold volume sub-linear
-        report("q79_cand_volume_scaled4", () => candVolume(emb, 8 + 2 * log2m, 3))
-        report("q79_embed_scaled4planes", () =>
-          Dedup.embeddingNearDup(emb, "vec_id", "embedding", 0.4,
-            8 + 2 * log2m, tables = 3).count())
-        emb.unpersist(blocking = false)
-      }
-
-      // ---- q80: multi-table LSH TOP-K — the `tables` knob's cost on
-      // the top-k path, measured rather than inferred (VERDICT r10
-      // item 8; q79's schedules cover near-dup only). Same multiplied
-      // embeddings as q79; a fixed 20-query panel probes the corpus.
-      // Per factor:
-      //  * the DEDUPED candidate-set size at tables=1 vs 3 — the rows
-      //    the exact scorer pays for; recall 1-(1-p)^T costs at most
-      //    T× candidates pre-dedup, less after (bucket overlap)
-      //  * the operator end-to-end at tables=1/2/3, planes scaled with
-      //    the corpus like q79 (+1 per 4× step)
-      if (only.forall(_.exists(p => p.startsWith("q80") || "q80".startsWith(p)))) {
-        val emb = multiplyEmb()
-        val queries = emb.filter(col("vec_id") < 20)
-        val log2m = 31 - Integer.numberOfLeadingZeros(math.max(m, 1))
-        val scaledPlanes = 8 + log2m
-        def candTopK(tables: Int): Long =
-          graft.llm.Similarity.bandedBuckets(queries, "vec_id", "embedding",
-              scaledPlanes, tables, "query_id")
-            .join(graft.llm.Similarity.bandedBuckets(emb, "vec_id", "embedding",
-              scaledPlanes, tables, "neighbor_id"), Seq("tbl", "bucket"))
-            .filter(col("query_id") =!= col("neighbor_id"))
-            .select(col("query_id"), col("neighbor_id")).distinct().count()
-        report("q80_topk_cand_t1", () => candTopK(1))
-        report("q80_topk_cand_t3", () => candTopK(3))
-        for (tb <- Seq(1, 2, 3))
-          report(s"q80_topk_tables$tb", () =>
-            graft.llm.Similarity.lshTopK(queries, emb, "vec_id", "vec_id",
-              "embedding", k = 5, planes = scaledPlanes, tables = tb).count())
-        emb.unpersist(blocking = false)
-      }
-
-      // ---- q78: deterministic token-budget sampling ----
-      // budget scales with the corpus (x m) so the kept FRACTION is
-      // constant — the measured work is the per-source window sort over
-      // m x more 24-byte rows, the stage that serializes on a skewed
-      // giant source (the documented two-phase fallback's trigger)
-      report("q78_token_budget", () =>
-        graft.llm.Text.sampleByTokenBudget(docs, "doc_id", "text", "source",
-          budgetTokens = 2000L * m).count())
-      // the two-phase fallback's trigger scenario, measured head-to-head:
-      // ONE giant source (every doc remapped to it), so the single-phase
-      // per-source window sort runs as a single serial task while the
-      // two-phase form (identical output, spec-tested) sorts 32 buckets
-      // in parallel and never sorts rows past the budget boundary. The
-      // balanced 5-source q78 above CAN'T show this — with sources ≥
-      // cores the serial sort is already hidden.
-      val skewed = docs.withColumn("source", lit("giant"))
-      report("q78_skew_singlephase", () =>
-        graft.llm.Text.sampleByTokenBudget(skewed, "doc_id", "text", "source",
-          budgetTokens = 10000L * m).count())
-      report("q78_skew_twophase", () =>
-        graft.llm.Text.sampleByTokenBudget(skewed, "doc_id", "text", "source",
-          budgetTokens = 10000L * m, buckets = 32).count())
-      // the structural claim isolated (SCALECURVE.md explains why the
-      // end-to-end pair above can't show it at toy scale): identical
-      // recomputed input, window partitioned by src (one serial task —
-      // the single-phase shape) vs by (src, bucket) (parallel sorts —
-      // the two-phase shape). Plus the scan floor both sit on.
-      def rec78 = skewed.select(col("doc_id").as("doc"), col("source").as("src"),
-        graft.llm.Text.tokenCountWs(col("text")).as("n_tokens"),
-        graft.llm.Text.fingerprint(col("text")).as("fp"))
-      report("q78_scan_only", () =>
-        rec78.agg(sum(col("n_tokens")), max(col("fp"))).head().getLong(0))
-      // both consume the cum column through the same 1-row aggregate, so
-      // the window can't be pruned and neither side materializes output
-      val wSer = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("src")).orderBy(col("fp"), col("doc"))
-      report("q78_window_serial", () =>
-        rec78.withColumn("cum", sum(col("n_tokens")).over(wSer))
-          .agg(max(col("cum"))).head().getLong(0))
-      val wBkt = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("src"), col("bkt")).orderBy(col("fp"), col("doc"))
-      report("q78_window_bucketed", () =>
-        rec78.withColumn("bkt", expr(s"fp div ${(2147483647L + 31) / 32}L"))
-          .withColumn("cum", sum(col("n_tokens")).over(wBkt))
-          .agg(max(col("cum"))).head().getLong(0))
-      // the two-phase knob's actual trigger shape, end-to-end: the SAME
-      // corpus re-cut into ~8-token fragments (think deduplicated chat
-      // turns or code lines), all in ONE source. Rows multiply ~7x while
-      // scan bytes stay flat, so the single-task window sort dominates
-      // the (fully parallel) fingerprint scan — the regime the docs-
-      // shaped skew probe above never reaches locally (54-token docs
-      // keep the scan and the serial sort the same size). Fragment ids
-      // are deterministic (doc_id * 256 + fragment position).
-      val frags = docs.select(col("doc_id"), lit("giant").as("source"),
-          posexplode(expr(
-            "transform(sequence(0, (size(split(text, ' ')) - 1) div 8), " +
-              "i -> concat_ws(' ', slice(split(text, ' '), i * 8 + 1, 8)))")))
-        .select((col("doc_id") * 256L + col("pos")).as("doc_id"),
-          col("source"), col("col").as("text"))
-      report("q78_frag_singlephase", () =>
-        graft.llm.Text.sampleByTokenBudget(frags, "doc_id", "text", "source",
-          budgetTokens = 10000L * m).count())
-      report("q78_frag_twophase", () =>
-        graft.llm.Text.sampleByTokenBudget(frags, "doc_id", "text", "source",
-          budgetTokens = 10000L * m, buckets = 32).count())
-
-      // ---- q84: duplicate-n-gram repetition signals (r13) ----
-      // same multiplied corpus: the word-prefixed copies preserve each
-      // document's internal n-gram repetition structure exactly, so
-      // per-doc work is constant and the curve must be linear. This is
-      // also the regression guard for the lambda-capture bug (an
-      // O(words²) re-tokenization shows up as a big constant, not a
-      // curve bend — compare the absolute to wordcount-class queries).
-      report("q84_repetition", () =>
-        graft.llm.Text.repetitionSignals(docs, "doc_id", "text").count())
-
-      // ---- q89/q90/q91 (r13): lexical diversity, stratified sampling,
-      // HLL distinct sketches — same multiplied corpus. q89/q91 are
-      // wordcount-class (one explode + combiner-friendly aggs ⇒ the
-      // curve must be linear; the prefixed copies grow the vocabulary
-      // m×, which is the hard case for the sketch agg's hash state).
-      // q90 exact is the 2-pass global rank over the narrow (id, score)
-      // projection — n·log n with a small constant — while its
-      // sort-free percentile_approx twin must stay linear: that gap,
-      // measured, is the reason the approx path exists at 100 TB.
-      report("q89_lexical", () =>
-        graft.llm.Text.lexicalDiversity(docs, "doc_id", "text").count())
-      report("q90_strata_exact", () =>
-        graft.llm.Text.sampleByQualityStrata(docs, "doc_id", "text").count())
-      report("q90_strata_approx", () =>
-        graft.llm.Text.qualityStrataApprox(docs, "doc_id", "text").count())
-      report("q91_sketch", () =>
-        graft.ops.Sketches.approxDistinct(
-          docs.select(col("source"),
-            explode(split(col("text"), " ")).as("word")),
-          Seq("source"), "word").count())
-
-      // ---- q94/q95/q97 (r13 session 3): importance weights, chunking,
-      // sequence packing — all over the same multiplied corpus.
-      // q94 is unigramLogProb-shaped (explode → vocab agg → join →
-      // per-doc sum); the prefixed copies grow the VOCABULARY m×, so
-      // the broadcast-vocab threshold (250k rows) is crossed at the
-      // large factors and the measured curve includes the documented
-      // broadcast→shuffle-join fallback transition. q95 is shuffle-free
-      // per-row transform+explode (must be linear, scan-bound). q97 is
-      // the 2-pass prefix sum — same machinery as q90's global rank,
-      // n·log n with the range-sort constant.
-      report("q94_dsir", () =>
-        graft.llm.Text.importanceWeights(docs, "doc_id", "text",
-          col("source") === "src0").count())
-      report("q95_chunk", () =>
-        graft.llm.Text.chunk(docs, "doc_id", "text", 32, 24).count())
-      report("q97_pack", () =>
-        graft.llm.Text.packSequences(docs, "doc_id", "text", 4096L).count())
-
-      // ---- q99/q100 (r13 session 3): bigram LM + sequence-prep
-      // capstone. q99 is q94's shape one n-gram up: the bigram
-      // vocabulary grows faster than the unigram one (prefixed copies
-      // make copies' bigram spaces disjoint), so the broadcast→shuffle
-      // fallback hits EARLIER — the curve includes that transition.
-      // q100 composes scan-local scoring, the chunk explode and the
-      // 2-pass prefix sum; its curve must track q95 + q97.
-      report("q99_bigram", () =>
-        graft.llm.Text.bigramLogProb(docs, "doc_id", "text").count())
-      report("q100_prep", () =>
-        graft.llm.Curate.prepSequences(docs, "doc_id", "text").count())
-      // q103: k-per-group — the per-source window ranks in parallel
-      // across sources; constant output (k×sources), so the measured
-      // term is the fingerprint scan + the partitioned rank. q104:
-      // one-scan profile over the text column id/source — multi-
-      // distinct aggregation, cardinality-bounded shuffle.
-      report("q103_group_sample", () =>
-        graft.llm.Text.samplePerGroup(docs, "doc_id", "text", "source", 5).count())
-      report("q104_profile", () =>
-        graft.ops.Profile.profile(docs, Seq("doc_id", "source", "text")).count())
-
-      // ---- q92/q93 (r13): PQ-ADC vs IVFPQ ANN under corpus growth ----
-      // same sign-flip multiplied embeddings as q80; fixed 10-query
-      // panel, t2 parameters. Both curves must be linear (training is
-      // driver-side on a bounded sample; encode scans the corpus once);
-      // the structural claim measured here is the CONSTANT: q92's ADC
-      // fold touches every code row while q93 prunes the scan to
-      // nprobe/nCells (~25%) of the inverted lists, so q93's advantage
-      // should hold or widen as m grows.
-      if (only.forall(_.exists(p => "q92_pq".startsWith(p) || "q93_ivfpq".startsWith(p)))) {
-        val emb = multiplyEmb()
-        val queries = emb.filter(col("vec_id") < 10)
-        report("q92_pq", () =>
-          graft.llm.Similarity.pqTopK(queries, emb, "vec_id", "vec_id",
-            "embedding", k = 5, m = 16, codewords = 16, rerank = 8).count())
-        report("q93_ivfpq", () =>
-          graft.llm.Similarity.ivfPqTopK(queries, emb, "vec_id", "vec_id",
-            "embedding", k = 5, nCells = 16, nprobe = 4, m = 16,
-            codewords = 16, rerank = 8).count())
-        emb.unpersist(blocking = false)
-      }
-
-      // ---- q98 (r13): SemDeDup — cells shard the within-cell pair
-      // quadratic. Sign-flip multiplied embeddings; nCells grows with
-      // the corpus (×4 data → ×4 cells) so CELL POPULATION is constant,
-      // the paper's own scaling discipline — the curve must then be
-      // linear; a fixed nCells would grow m² by construction.
-      if (only.forall(_.exists(p => "q98_semdedup".startsWith(p)))) {
-        val emb = multiplyEmb()
-        // smallGraph=0: the curve pins the DISTRIBUTED components path
-        // (the driver shortcut would absorb the graph at every factor)
-        report("q98_semdedup", () =>
-          graft.llm.Dedup.semDedup(emb, "vec_id", "embedding",
-            nCells = 16 * m, threshold = 0.4, smallGraph = 0L)
-            .filter(!col("is_keeper")).count())
-        emb.unpersist(blocking = false)
-      }
-
-      // ---- q132 (r20): persisted IVF index lifecycle — sign-flip
-      // multiplied embeddings, nCells = 16·m (the q98 discipline:
-      // constant cell population, so the per-query probed volume is
-      // constant and the curve's linear terms are build's corpus
-      // assignment + append's batch assignment + table I/O). Stage
-      // rows split the lifecycle: build (train + assign + write half
-      // the corpus), append (assign + append the other half), query
-      // (10 queries, k=5, nprobe=3 — must stay ~FLAT: probed volume
-      // is nprobe × cell population, independent of corpus size).
-      // buckets stays FIXED at 4: a buckets=4·m variant was measured
-      // (build 52 s / append 45 s / query 4.7 s at 64× vs 11/9/3 at
-      // 4 buckets) — at this corpus-per-bucket ratio the per-file
-      // write/scan overhead of 256 buckets swamps everything, so the
-      // probe's bucket pruning is asserted structurally (the
-      // SelectedBucketsCount plan check in VectorIndexSpec) rather
-      // than demonstrated at a scale where it cannot win. Production
-      // sizing: buckets grow with the corpus only once a bucket holds
-      // file-sized data (≥ hundreds of MB per bucket), never before.
-      if (only.forall(_.exists(p => "q132_ivf_index".startsWith(p)))) {
-        val emb = multiplyEmb()
-        var lastStages: Seq[(String, Double, Long)] = Nil
-        val VI = graft.llm.VectorIndex
-        report("q132_ivf_index", () => {
-          val st = Seq.newBuilder[(String, Double, Long)]
-          // the row-count probes live INSIDE their stage timers so
-          // total ≈ sum(stages) — an untimed count between stages is
-          // run time attributed to no stage (r20 review)
-          val (tBuild, nBuilt) = time {
-            VI.build(emb.filter(pmod(col("vec_id"), lit(2)) === 0),
-              "vec_id", "embedding", nCells = 16 * m,
-              "zsc132_idx", "zsc132_man", buckets = 4)
-            spark.table("zsc132_idx").count()
-          }
-          st += (("build", tBuild, nBuilt))
-          val (tAppend, nTotal) = time {
-            VI.append(emb.filter(pmod(col("vec_id"), lit(2)) === 1),
-              "vec_id", "embedding", "zsc132_idx", "zsc132_man")
-            spark.table("zsc132_idx").count()
-          }
-          st += (("append", tAppend, nTotal))
-          val (tQuery, nRes) = time(
-            VI.query(emb.filter(col("vec_id") < 10), "vec_id", "embedding",
-              "zsc132_idx", "zsc132_man", k = 5, nprobe = 3).count())
-          st += (("query", tQuery, nRes))
-          lastStages = st.result()
-          nRes
-        }, stages = () => lastStages)
-        Seq("zsc132_idx", "zsc132_man").foreach(tn =>
-          spark.sql(s"DROP TABLE IF EXISTS $tn"))
-        emb.unpersist(blocking = false)
-      }
-
-      // ---- q86/q87: as-of + range join over multiplied events (r13) ----
-      // copy c offsets user_id (disjoint key spaces → per-user as-of
-      // structure preserved), event_id (uniqueness), and shifts ts by
-      // c×(span+1h) so TIME DENSITY is constant — otherwise q87's
-      // within-radius pair count would grow m² by construction rather
-      // than by plan defect. Both curves must be linear: q86 is one
-      // shuffle+window, q87 one bucket equi-join with ≤3× blowup.
-      if (only.forall(_.exists(p => "q86_asof".startsWith(p) ||
-          "q87_range".startsWith(p) || "q101_funnel".startsWith(p) ||
-          "q102_retention".startsWith(p)))) {
-        val evBase = Tables.load(spark, dir, "events")
-          .select(col("event_id"), col("user_id"), col("ts"),
-            col("event_type"), col("value"))
-        val bounds = evBase.agg(min(unix_micros(col("ts"))),
-          max(unix_micros(col("ts")))).head()
-        val shift = bounds.getLong(1) - bounds.getLong(0) + 3600000000L
-        val ev = (1 until m).map { c =>
-          evBase.select((col("event_id") + c.toLong * 100000000L).as("event_id"),
-            (col("user_id") + c.toLong * 10000000L).as("user_id"),
-            timestamp_micros(unix_micros(col("ts")) + c * shift).as("ts"),
-            col("event_type"), col("value"))
-        }.foldLeft(evBase)(_ union _)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        ev.count()
-        val clicks = ev.filter(col("event_type") === "click")
-          .select(col("event_id"), col("user_id"), col("ts"))
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-        val errors = ev.filter(col("event_type") === "error").select(col("ts"))
-        report("q86_asof", () =>
-          graft.ops.AsofJoin.asof(clicks, purchases, Seq("user_id"),
-            "ts", "ts", Seq("event_id", "value"), "prior_").count())
-        // r14: the hot-key two-level form on the same data (1-day
-        // buckets) — must stay linear with a constant-factor overhead
-        // vs the single-window form (two windows + one extra join)
-        report("q86_asof_bucketed", () =>
-          graft.ops.AsofJoin.asof(clicks, purchases, Seq("user_id"),
-            "ts", "ts", Seq("event_id", "value"), "prior_",
-            bucketWidth = Some(86400L)).count())
-        // r14: DELIBERATE hot key — every row on user 0, so the
-        // single-window form serializes its sort on ONE task while the
-        // bucketed form splits it across hour buckets (time span grows
-        // m×, so bucket count grows m× at constant per-bucket size:
-        // the curve stays linear exactly when the refinement works)
-        val hotC = clicks.withColumn("user_id", lit(0L))
-        val hotP = purchases.withColumn("user_id", lit(0L))
-        report("q86_asof_hot_single", () =>
-          graft.ops.AsofJoin.asof(hotC, hotP, Seq("user_id"),
-            "ts", "ts", Seq("event_id", "value"), "prior_").count())
-        report("q86_asof_hot_bucketed", () =>
-          graft.ops.AsofJoin.asof(hotC, hotP, Seq("user_id"),
-            "ts", "ts", Seq("event_id", "value"), "prior_",
-            bucketWidth = Some(3600L)).count())
-        report("q87_range", () =>
-          graft.ops.RangeJoin.countWithinRadius(clicks, errors,
-            "event_id", "ts", "ts", 300000000L).count())
-        // q101/q102 (r13 s3): funnel + retention over the same
-        // multiplied events — per-user aggregations and one equi-join,
-        // so both must be linear (user space grows m×, per-user event
-        // counts constant).
-        report("q101_funnel", () => {
-          val su = ev.filter(col("event_type") === "signup")
-            .groupBy(col("user_id")).agg(min(col("ts")).as("signup_ts"))
-          val pu = ev.filter(col("event_type") === "purchase")
-            .select(col("user_id"), col("ts").as("p_ts"))
-          su.join(pu, Seq("user_id"), "left_outer")
-            .groupBy(col("user_id"), col("signup_ts"))
-            .agg(min(when(col("p_ts") >= col("signup_ts"), col("p_ts"))).as("first_p"))
-            .agg(count(lit(1)).as("n"),
-              sum(when(col("first_p").isNotNull, 1L).otherwise(0L)).as("np"))
-            .count()
-        })
-        report("q102_retention", () => {
-          val first = ev.groupBy(col("user_id"))
-            .agg(date_trunc("day", min(col("ts"))).as("cohort"))
-          ev.select(col("user_id"), col("ts")).join(first, "user_id")
-            .select(col("cohort"),
-              datediff(date_trunc("day", col("ts")), col("cohort")).as("off"),
-              col("user_id"))
-            .filter(col("off") <= 7)
-            .groupBy(col("cohort"), col("off"))
-            .agg(countDistinct(col("user_id")).as("n_users"))
-            .count()
-        })
-        ev.unpersist(blocking = false)
-      }
-
-      // ---- avro: the round-11 AvroStorage source/sink vs parquet ----
-      // four measurements per factor, same multiplied corpus: write and
-      // full-read+agg for both formats (is the splittable avro path's
-      // throughput LINEAR like parquet's, and what constant factor does
-      // row-major decode cost?) plus the pruned avro read (does the
-      // projected reader schema actually avoid decoding the text?).
-      if (only.forall(_.exists("avro".startsWith))) {
-        val avroTmp = s"/tmp/graft_scale_avro_m$m"
-        val parqTmp = s"/tmp/graft_scale_parq_m$m"
-        report("avro_write", () => {
-          graft.sources.Loaders.storeAvro(docs, avroTmp); nDocs })
-        report("avro_read_agg", () =>
-          graft.sources.Loaders.avroLoader(spark, avroTmp)
-            .agg(sum(length(col("text")))).head().getLong(0))
-        report("avro_read_pruned2col", () =>
-          graft.sources.Loaders.avroLoader(spark, avroTmp, Seq("doc_id", "source"))
-            .groupBy(col("source")).agg(count(lit(1))).count())
-        report("parquet_write", () => {
-          docs.write.mode("overwrite").parquet(parqTmp); nDocs })
-        report("parquet_read_agg", () =>
-          spark.read.parquet(parqTmp).agg(sum(length(col("text")))).head().getLong(0))
-      }
-
-      docs.unpersist(blocking = false)
-      spark.catalog.clearCache()
-    }
-
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT", "scalecurve_out.jsonl")
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), out.toString)
-    spark.stop()
-  }
-
-  /** Stage timings replicating Dedup.minhashLsh (Dedup.scala: collapse
-    * →banding→bucket pairs→verify→expand); each stage's input is
-    * persisted so a stage is charged only for its own work. The
-    * replica uses the SAME kernels and shapes as the operator — the
-    * end-to-end medians above are measured on the real operator, so
-    * the replica only explains the breakdown, never the headline.
-    */
-  private def minhashStages(spark: SparkSession, docs: DataFrame): Seq[(String, Double, Long)] = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val buf = Vector.newBuilder[(String, Double, Long)]
-    val idType = docs.schema("doc_id").dataType
-
-    val docSchema = StructType(Seq(
-      StructField("doc", idType), StructField("hs", ArrayType(LongType))))
-    val docsK = spark.createDataFrame(
-      docs.select(col("doc_id"), col("text")).rdd.mapPartitions(_.map { r =>
-        Row(r.get(0), Dedup.shingleHashSet(r.getString(1), 3).toSeq)
-      }), docSchema)
-    val groups = docsK
-      .withColumn("fp_a", xxhash64(col("hs")))
-      .withColumn("fp_b", xxhash64(lit("graft-fp2"), col("hs")))
-      .groupBy(col("fp_a"), col("fp_b"))
-      .agg(min(col("doc")).as("rep"), min_by(col("hs"), col("doc")).as("sh"),
-        collect_list(col("doc")).as("ids"))
-      .persist(MEMORY_AND_DISK)
-    val (t1, n1) = time(groups.count())
-    buf += (("shingle_kernel_collapse", t1, n1))
-
-    val mem = groups.select(col("rep"), explode(col("ids")).as("id"))
-      .persist(MEMORY_AND_DISK)
-    mem.count()
-    val shingled = groups.select(col("rep").as("doc"), col("sh"))
-    val bandSchema = StructType(Seq(StructField("doc", idType),
-      StructField("band", IntegerType), StructField("key", LongType)))
-    val banded = spark.createDataFrame(
-      shingled.rdd.mapPartitions(_.flatMap { r =>
-        val doc = r.get(0)
-        val keys = Dedup.bandKeysFromHashes(r.getSeq[Long](1).toArray, 64, 32)
-        keys.iterator.zipWithIndex.map { case (k, b) => Row(doc, b, k) }
-      }), bandSchema).persist(MEMORY_AND_DISK)
-    val (t2, n2) = time(banded.count())
-    buf += (("banding", t2, n2))
-
-    val cand = banded.groupBy(col("band"), col("key"))
-      .agg(collect_list(col("doc")).as("ds"))
-      .filter(size(col("ds")).between(2, 10000))
-      .select(explode(col("ds")).as("a"), col("ds"))
-      .select(col("a"), explode(col("ds")).as("b"))
-      .filter(col("a") < col("b"))
-      .select(col("a").as("id_a"), col("b").as("id_b"))
-      .distinct()
-      .persist(MEMORY_AND_DISK)
-    val (t3, n3) = time(cand.count())
-    buf += (("bucket_pairs", t3, n3))
-
-    val repPairs = cand
-      .join(shingled.toDF("id_a", "sh_a"), "id_a")
-      .join(shingled.toDF("id_b", "sh_b"), "id_b")
-      .select(col("id_a"), col("id_b"),
-        (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b")))).as("jaccard"))
-      .filter(col("jaccard") >= 0.6)
-      .persist(MEMORY_AND_DISK)
-    val (t4, n4) = time(repPairs.count())
-    buf += (("verify_jaccard", t4, n4))
-
-    val cross = repPairs
-      .join(mem.toDF("rep_a", "m_a"), col("rep_a") === col("id_a"))
-      .join(mem.toDF("rep_b", "m_b"), col("rep_b") === col("id_b"))
-      .select(least(col("m_a"), col("m_b")).as("id_a"),
-        greatest(col("m_a"), col("m_b")).as("id_b"), col("jaccard"))
-    val intra = mem.toDF("rep", "m_a").as("x")
-      .join(mem.toDF("rep", "m_b").as("y"),
-        col("x.rep") === col("y.rep") && col("m_a") < col("m_b"))
-      .select(col("m_a").as("id_a"), col("m_b").as("id_b"), lit(1.0).as("jaccard"))
-    val (t5, n5) = time(
-      cross.unionByName(intra).filter(col("jaccard") >= 0.6).count())
-    buf += (("expand_pairs", t5, n5))
-
-    Seq(groups, mem, banded, cand, repPairs).foreach(_.unpersist(blocking = false))
-    buf.result()
-  }
-
-  /** Exact multi-table LSH candidate volume — Σ over (table, bucket)
-    * of n·(n−1)/2, computed as a count aggregation (never materializes
-    * a pair). This is the number the plane-count knob must bound.
-    */
-  private def candVolume(emb: DataFrame, planes: Int, tables: Int): Long =
-    graft.llm.Similarity.bandedBuckets(emb, "vec_id", "embedding", planes, tables)
-      .groupBy(col("tbl"), col("bucket")).agg(count(lit(1)).as("n"))
-      .agg(coalesce(sum(expr("n * (n - 1) DIV 2")), lit(0L)).as("vol"))
-      .collect()(0).getLong(0)
-
-  /** q77 breakdown: one labeled run via [[Dedup.componentsImpl]]. The
-    * `prop_rounds` and `escalated` rows reuse the stage schema with a
-    * COUNT/FLAG in the `sec` field (documented in SCALECURVE.md) — the
-    * rounds-vs-size curve is the evidence the verdict asked for.
-    */
-  private def componentStages(pairs: DataFrame): Seq[(String, Double, Long)] = {
-    val t0 = System.nanoTime()
-    val (lab, rounds, escalated) =
-      Dedup.componentsImpl(pairs, "id_a", "id_b", 20, 5, smallGraph = 0L)
-    val n = lab.count()
-    val dt = (System.nanoTime() - t0) / 1e9
-    Seq(("components_total", dt, n),
-      ("prop_rounds", rounds.toDouble, n),
-      ("escalated", if (escalated) 1.0 else 0.0, 0L))
-  }
-
-  /** Stage timings for the Curate.curate composition (boilerplate
-    * reassembly → scrub+score+filter → exact dedup → per-source stats),
-    * same persist-isolation discipline as [[minhashStages]].
-    */
-  private def curateStages(docs: DataFrame): Seq[(String, Double, Long)] = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    import graft.llm.{Dedup, Text}
-    val buf = Vector.newBuilder[(String, Double, Long)]
-    val boiler = Text.removeBoilerplate(docs, "doc_id", "text", ". ", 3)
-      .withColumnRenamed("doc", "doc_id")
-      .persist(MEMORY_AND_DISK)
-    val (t1, n1) = time(boiler.count())
-    buf += (("boilerplate_reassembly", t1, n1))
-
-    val cleaned = boiler
-      .join(docs.select(col("doc_id"), col("source")), Seq("doc_id"))
-      .withColumn("clean", Text.scrubPii(col("clean")))
-      .withColumn("quality", Text.qualityScore(col("clean")))
-      .filter(col("quality") >= 0.5)
-      .persist(MEMORY_AND_DISK)
-    val (t2, n2) = time(cleaned.count())
-    buf += (("scrub_score_filter", t2, n2))
-
-    // fingerprint-keyed, matching Curate.curate since round 9 — the
-    // dedup shuffle carries two Long columns, never the cleaned text
-    val keepers = Dedup.exactByFingerprint(cleaned, "clean", "doc_id")
-      .select(col("keeper_id").as("doc_id"))
-      .persist(MEMORY_AND_DISK)
-    val (t3, n3) = time(keepers.count())
-    buf += (("exact_dedup", t3, n3))
-
-    val (t4, n4) = time(cleaned.join(keepers, Seq("doc_id"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(Text.tokenCountWs(col("clean"))).as("sum_tokens"),
-        sum(col("quality").cast("decimal(18,4)")).cast("double").as("sum_quality"))
-      .count())
-    buf += (("per_source_stats", t4, n4))
-
-    Seq(boiler, cleaned, keepers).foreach(_.unpersist(blocking = false))
-    buf.result()
-  }
-
-  /** Stage timings replicating Dedup.ngramJaccard (kernel shingle rows
-    * →df→prefix index→probe→verify); same persist-isolation discipline
-    * as [[minhashStages]].
-    */
-  private def ngramStages(spark: SparkSession, blocked: DataFrame): Seq[(String, Double, Long)] = {
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val buf = Vector.newBuilder[(String, Double, Long)]
-    val docSchema = StructType(Seq(
-      StructField("blk", blocked.schema("blk").dataType),
-      StructField("doc", blocked.schema("doc_id").dataType),
-      StructField("hs", ArrayType(LongType))))
-    val docsK = spark.createDataFrame(
-      blocked.select(col("blk"), col("doc_id"), col("text")).rdd.mapPartitions(_.map { r =>
-        Row(r.get(0), r.get(1), Dedup.shingleHashSet(r.getString(2), 3).toSeq)
-      }), docSchema).persist(MEMORY_AND_DISK)
-    val (t1, n1) = time(docsK.count())
-    buf += (("shingle_kernel", t1, n1))
-
-    val sh = docsK.select(col("blk"), col("doc"), size(col("hs")).as("n"),
-      explode(col("hs")).as("h")).persist(MEMORY_AND_DISK)
-    sh.count()
-    val dfreq = sh.groupBy(col("blk"), col("h")).agg(count(lit(1)).as("dfc"))
-      .persist(MEMORY_AND_DISK)
-    val (t2, n2) = time(dfreq.count())
-    buf += (("doc_frequency", t2, n2))
-
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("blk"), col("doc")).orderBy(col("dfc"), col("h"))
-    val prefix = sh.join(dfreq.hint("shuffle_hash"), Seq("blk", "h"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <=
-        col("n") - ceil(lit(0.3) * col("n") - lit(1e-9)).cast("int") + 1)
-      .select(col("blk"), col("doc").as("b"), col("h"))
-      .persist(MEMORY_AND_DISK)
-    val (t3, n3) = time(prefix.count())
-    buf += (("prefix_index", t3, n3))
-
-    val cand = sh.select(col("blk"), col("doc").as("a"), col("h"))
-      .join(prefix.hint("shuffle_hash"), Seq("blk", "h"))
-      .filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("id_a"),
-        greatest(col("a"), col("b")).as("id_b"))
-      .distinct()
-      .persist(MEMORY_AND_DISK)
-    val (t4, n4) = time(cand.count())
-    buf += (("probe_candidates", t4, n4))
-
-    val sets = docsK.select(col("doc"), col("hs"), size(col("hs")))
-    val (t5, n5) = time(cand
-      .join(sets.toDF("id_a", "sa", "ca"), "id_a")
-      .join(sets.toDF("id_b", "sb", "cb"), "id_b")
-      .withColumn("i", size(array_intersect(col("sa"), col("sb"))))
-      .select(col("id_a"), col("id_b"),
-        (col("i") / (col("ca") + col("cb") - col("i"))).as("jaccard"))
-      .filter(col("jaccard") >= 0.3)
-      .count())
-    buf += (("verify_jaccard", t5, n5))
-
-    Seq(docsK, sh, dfreq, prefix, cand).foreach(_.unpersist(blocking = false))
-    buf.result()
+    require(args.length == 3, "usage: ScaleCurve <baseDir> <outRoot> <m>")
+    val spark = Graft.localSession(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "scale-curve")
+    try println(write(spark, args(0), args(1), args(2).toInt))
+    finally spark.stop()
   }
 }

@@ -390,7 +390,7 @@ class DedupSpec extends SparkSuite {
         s"n=$n: $rounds rounds > 2·log²(n) = ${2 * log2n * log2n}")
       // and the result is one star centered at 0: the fixpoint edge set
       // maps every member to the center, which has no self-row (the
-      // caller coalesces it — see componentsImpl's left join)
+      // caller coalesces it — see components' left join)
       val lab = labels.as[(Long, Long)].collect()
       assert(lab.length == n - 1 && lab.forall(_._2 == 0L) &&
         !lab.exists(_._1 == 0L), s"n=$n labels wrong")

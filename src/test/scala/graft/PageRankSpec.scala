@@ -56,20 +56,39 @@ class PageRankSpec extends SparkSuite {
     val res = PageRank.ranks(diamond.toDF("src", "dst"), iterations = 6)
     assert(res.as[(Long, Long)].collect().toMap == reference(diamond, 6))
     // the returned frame's plan starts from the last cut, not from six
-    // nested InMemoryRelations (the r21 q122 57k-line dump): the cut
-    // shows as a flat RDD scan and the nesting is bounded by CutEvery
-    val plan = res.queryExecution.optimizedPlan.toString
-    assert(plan.contains("ExistingRDD"),
-      s"expected a localCheckpoint cut (ExistingRDD) in the plan:\n$plan")
+    // nested InMemoryRelations (the r21 q122 57k-line dump): the last
+    // round is itself a localCheckpoint, so every leaf of the returned
+    // plan is a flat RDD scan (LogicalRDD)
+    val optimized = res.queryExecution.optimizedPlan
+    val plan = optimized.toString
+    assert(optimized.collectLeaves().forall(
+        _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]),
+      s"expected the plan to read only a localCheckpoint cut (LogicalRDD):\n$plan")
     // bound is CutEvery-proportional, not iteration-proportional: at
     // most CutEvery un-cut levels (plus the nodes/eod cache nesting)
-    // sit above the last ExistingRDD — ~500 lines here vs the r21
-    // uncut 5-iteration dump's ~57k
+    // sit above the last cut — ~500 lines here vs the r21 uncut
+    // 5-iteration dump's ~57k
     assert(plan.linesIterator.size < 800, s"plan not bounded: ${plan.linesIterator.size} lines")
     // intermediate checkpoint blocks are swept after the final action;
-    // only the returned frame's own cache may remain
+    // only the returned frame's own checkpoint may remain
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.size <= 1, s"leaked persisted RDDs: $leaked")
+    spark.sparkContext.getPersistentRDDs.foreach { case (id, r) =>
+      if (!before.contains(id)) r.unpersist(true)
+    }
+    spark.catalog.clearCache()
+  }
+
+  test("the returned frame stays readable after tracked caches are released") {
+    // the intermediate checkpoint blocks are swept inside ranks(); a
+    // returned frame whose lineage still ran through them failed its
+    // next recompute with "Checkpoint block not found"
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val res = PageRank.ranks(diamond.toDF("src", "dst"), iterations = 6)
+    val first = res.as[(Long, Long)].collect().toMap
+    graft.dsl.Rel.releaseTracked(blocking = true)
+    assert(res.as[(Long, Long)].collect().toMap == first)
+    assert(first == reference(diamond, 6))
     spark.sparkContext.getPersistentRDDs.foreach { case (id, r) =>
       if (!before.contains(id)) r.unpersist(true)
     }

@@ -139,6 +139,12 @@ object Bench {
     // successful iteration's): a scale curve reads "output grows exactly
     // m×" from the full artifact without a second run
     val rows = scala.collection.mutable.Map[String, Long]()
+    // Janino compiles (codegen cache misses) across a query's reported
+    // timed iterations; the counter is read between iterations, outside
+    // each timed count()
+    def compiles(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val codegen = scala.collection.mutable.Map[String, Long]()
     val measured = selected.map { case (name, fn) =>
       // timed action is count(): a KNOWN, documented trade — Catalyst
       // prunes columns the count doesn't need, so work living ONLY in
@@ -187,7 +193,13 @@ object Bench {
         var extra = 0
         while (prev > 1.3 * cur && extra < 6) { prev = cur; cur = once(); extra += 1 }
       }
-      val first = (1 to iters).map(_ => once()).toVector
+      def timedSet(): Vector[Double] = {
+        val c0 = compiles()
+        val ts = (1 to iters).map(_ => once()).toVector
+        codegen(name) = compiles() - c0
+        ts
+      }
+      val first = timedSet()
       // bounded post-hoc retry: convergence-checked warm-up still stalls
       // when a query has TWO plateaus (interpreted vs JIT-compiled) and
       // both warm passes land on the slow one. By the time the first
@@ -196,7 +208,7 @@ object Bench {
       // original array is preserved in the artifact's `retried` field —
       // the retry replaces the estimate, never hides the evidence. A
       // query still unconverged after its retry stays flagged.
-      val retry = if (warm && unconverged(first)) Some((1 to iters).map(_ => once()).toVector)
+      val retry = if (warm && unconverged(first)) Some(timedSet())
                   else None
       (name, retry.getOrElse(first), retry.map(_ => first))
     }
@@ -320,6 +332,8 @@ object Bench {
       val n = if (failed(k)) None else rows.get(k)
       s"\"" + k + "\":" + n.fold("null")(_.toString)
     }.mkString("{", ",", "}")
+    val codegenJson = medians.map { case (k, _) => s"\"" + k + "\":" + codegen(k) }
+      .mkString("{", ",", "}")
     // env-derived strings ride raw into the JSON: escape them (the
     // Verify escaper's rule — an sfDir with a quote or backslash would
     // otherwise corrupt both artifacts; r17 review)
@@ -330,7 +344,7 @@ object Bench {
       case c => c.toString
     }
     val json =
-      s"""{"metric":"$metric","value":${f(total)},"unit":"sec","queries":$qs,"queries_steady":$steadyJson,"steady_total":${f(steadyTotal)},"warmed":$warm,"adjudication":"${jq(adjudication)}","iterations":$itersJson,"spread_max_over_min":$spread,"calibration_sec":${f(calibMed)},"calibration_iters":$calibJson,"calibration_end_sec":${f(calibEnd)},"calibration_ref":$CalibRef,"norm_factor":${f(normFactor)},"norm_total":${f(normTotal)},"queries_norm":$normJson,"rows":$rowsJson,"sf":"${jq(sfDir)}","heap_gb":$heapGb,"host_mem_gb":$hostMemJson,"pin_exceeds_ram":$pinExceedsRam,"comparable_to":"${jq(comparableTo)}"$onlyMark$failedMark$retriedMark}"""
+      s"""{"metric":"$metric","value":${f(total)},"unit":"sec","queries":$qs,"queries_steady":$steadyJson,"steady_total":${f(steadyTotal)},"warmed":$warm,"adjudication":"${jq(adjudication)}","iterations":$itersJson,"spread_max_over_min":$spread,"calibration_sec":${f(calibMed)},"calibration_iters":$calibJson,"calibration_end_sec":${f(calibEnd)},"calibration_ref":$CalibRef,"norm_factor":${f(normFactor)},"norm_total":${f(normTotal)},"queries_norm":$normJson,"rows":$rowsJson,"codegen_compiles":$codegenJson,"sf":"${jq(sfDir)}","heap_gb":$heapGb,"host_mem_gb":$hostMemJson,"pin_exceeds_ram":$pinExceedsRam,"comparable_to":"${jq(comparableTo)}"$onlyMark$failedMark$retriedMark}"""
     // The launcher that captures this main's stdout keeps only the LAST
     // ~2000 characters; BENCH_r10/r11 show the full line (per-query
     // iteration arrays push it past 10 KB) arriving head-truncated and

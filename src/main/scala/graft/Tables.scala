@@ -13,6 +13,16 @@ import org.apache.spark.sql.functions._
   */
 object Graft {
 
+  /** Bound of Spark's codegen cache (see [[configure]]). Working set
+    * measured with the cache unbounded: distinct generated classes over
+    * one run each of perfbench `ingest_stream` and `pig_etl` and a
+    * Bench pass of q128-q131 (sf0.1, its calibration probe and warm-up
+    * included) — 242, 217 and 670 classes, with 168, 162 and 180 MB of
+    * metaspace at exit. The bound is 3.0x the largest; a session whose
+    * plans stay within it compiles each class once.
+    */
+  val CodegenCacheEntries = 2000
+
   /** Common engine configuration, applied to any SparkSession builder.
     *
     *  - ANSI off: Pig arithmetic wraps on int overflow and yields null on
@@ -22,8 +32,16 @@ object Graft {
     *  - nanosAsLong: the `events` table ships as parquet timestamp[ns],
     *    which Spark has no native type for; we read the raw int64 and
     *    normalize in [[Tables.load]].
+    *  - codegen cache bound [[CodegenCacheEntries]]: Spark's generated-
+    *    class cache (`spark.sql.codegen.cache.maxEntries`, a static,
+    *    JVM-wide conf) defaults to 100 entries. One `Curate.ingestBatch`
+    *    plans more distinct classes than that, so with LRU eviction every
+    *    lookup of the next batch missed and each batch Janino-compiled
+    *    ~90-113 classes again (10-13 ms each, ~1.1-1.5 s of driver time
+    *    per batch). See the constant for the measured working set.
     */
   def configure(b: SparkSession.Builder): SparkSession.Builder = b
+    .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
     .config("spark.sql.extensions", "graft.plans.GraftExtensions")
     .config("spark.sql.ansi.enabled", "false")
     .config("spark.sql.session.timeZone", "UTC")

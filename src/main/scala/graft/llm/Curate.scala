@@ -163,6 +163,15 @@ object Curate {
     * else is batch-sized — the scale contract inherited from the two
     * incremental operators unchanged.
     *
+    * Plan shape: one pass, one persisted stage. The keeper's text rides
+    * the exact stage's fingerprint aggregation (`carry`, a `min_by`),
+    * so the near stage reads the exact stage's output directly instead
+    * of re-joining the gated batch; (fp_a, fp_b) ride the near stage's
+    * rep aggregation the same way, so no join back to the exact stage
+    * recovers them. The reps frame is the one persist (every near-stage
+    * consumer reads it); gate → fingerprint aggregation → fpStore
+    * anti-join → signatures run once beneath it.
+    *
     * @param fpStore  (fp_a, fp_b) rows from previous batches
     * @param sigStore (id, sig) rows from previous batches
     * @param bandIndex optional pre-built [[Dedup.lshBandIndex]] of
@@ -204,35 +213,19 @@ object Curate {
                         splitInvariant: Boolean = false): DataFrame = {
     manifest.foreach(Dedup.requireManifest(_, "incrementalCurate",
       Some(shingleK), numHashes, bands))
-    val gated = graft.dsl.Rel.track(
-      batch.filter(Text.qualityScore(col(textCol)) >= minQuality)
-        .select(col(idCol), col(textCol))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    // persisted: TWO consumers (the survivors semi-join and the final
-    // append-row join) would otherwise re-run the batch fingerprint
-    // aggregation AND the corpus-sized fpStore anti-join each — the
-    // same plan-luck exposure the lshIncremental store contract names
-    // (r17 review). The exactNew id is renamed to a graft_-prefixed
-    // temp: with idCol itself named "id" (the Dedup store convention!)
-    // the join conditions were AMBIGUOUS_REFERENCE crashes.
-    val exactNew = graft.dsl.Rel.track(
-      Dedup.exactIncremental(gated, textCol, idCol, fpStore)
-        .withColumnRenamed("id", "graft_ic_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val survivors = gated
-      .join(exactNew.select(col("graft_ic_id")),
-        col(idCol) === col("graft_ic_id"))
-      .drop("graft_ic_id")
-    val admitted = bandIndex match {
-      case Some(idx) => Dedup.lshIncrementalIndexed(survivors, idCol, textCol,
+    val gated = batch.filter(Text.qualityScore(col(textCol)) >= minQuality)
+      .select(col(idCol), col(textCol))
+    val exactNew = Dedup.exactIncremental(gated, textCol, idCol, fpStore,
+      carry = Seq(textCol))
+    val carry = Seq("fp_a", "fp_b")
+    val out = bandIndex match {
+      case Some(idx) => Dedup.lshIncrementalIndexed(exactNew, "id", textCol,
         sigStore, idx, shingleK, numHashes, bands, threshold,
-        splitInvariant = splitInvariant)
-      case None => Dedup.lshIncremental(survivors, idCol, textCol, sigStore,
+        splitInvariant = splitInvariant, carry = carry)
+      case None => Dedup.lshIncremental(exactNew, "id", textCol, sigStore,
         shingleK, numHashes, bands, threshold,
-        splitInvariant = splitInvariant)
+        splitInvariant = splitInvariant, carry = carry)
     }
-    val out = admitted
-      .join(exactNew, col("id") === col("graft_ic_id"))
     if (splitInvariant)
       out.select(col("id"), col("fp_a"), col("fp_b"), col("sig"), col("admitted"))
     else
@@ -292,8 +285,10 @@ object Curate {
     * sink must be idempotent, e.g. keyed on (batchId, id).
     *
     * Cache hygiene for an unbounded stream: the operator-internal
-    * tracked persists are released and the batch's own localCheckpoint
-    * blocks swept per batch (snapshot-diff of `getPersistentRDDs`, the
+    * tracked persists are released as soon as the result frame is
+    * checkpointed (and again in `finally`, for the error path), and the
+    * batch's own localCheckpoint blocks are swept per batch
+    * (snapshot-diff of `getPersistentRDDs`, the
     * Bench discipline — localCheckpoint blocks are invisible to
     * `clearCache`/`releaseTracked`). The sweep assumes the ingest
     * pipeline OWNS its session's cache (concurrent foreign persists
@@ -314,9 +309,15 @@ object Curate {
     def exists(t: String) = s.sessionState.catalog.tableExists(
       s.sessionState.sqlParser.parseTableIdentifier(t))
     // ledger skip: the row is written LAST, so its presence proves the
-    // batch's appends ALL committed — replaying it must be a no-op
+    // batch's appends ALL committed — replaying it must be a no-op. One
+    // scan job whose generated code is the same for every batch: Spark
+    // inlines a long literal into generated code (and numbers each
+    // LIMIT's counter from a JVM-wide sequence), so a `=== batchId`
+    // filter under `limit(1)` compiled fresh classes on every batch; a
+    // string literal reaches the generated class by reference instead
     val alreadyDone = ledgerTable.exists(lt => exists(lt) &&
-      s.table(lt).filter(col("batch_id") === batchId).limit(1).count() > 0L)
+      s.table(lt).filter(col("batch_id").cast("string") === batchId.toString)
+        .select(col("batch_id")).collect().nonEmpty)
     if (alreadyDone) return
     val rddsBefore = s.sparkContext.getPersistentRDDs.keySet
     try {
@@ -327,6 +328,10 @@ object Curate {
           manifest = manifestTable.map(s.table),
           splitInvariant = splitInvariant)
         .localCheckpoint() // RECACHE discipline — see scaladoc
+      // nothing reads the curate stage's persists past the checkpoint;
+      // released now, before the appends, so no append's catalog
+      // refresh re-plans a cached plan over the stores
+      graft.dsl.Rel.releaseTracked(blocking = true)
       onAdmitted(res, batchId)
       // sig + index rows: every returned rep (= every SEEN rep in
       // split-invariant mode, admits only in default mode); fp rows:

@@ -33,13 +33,20 @@ object Dedup {
     * a cross-text collision needs both to collide, ≈ n²/2¹²⁸).
     * Returns (keeper_id, n_copies) like [[exact]]; group keys are the
     * fingerprint halves.
+    *
+    * @param carry input columns to return as the keeper's (min-id row's)
+    *        values — one `min_by` each, riding the same aggregation
     */
-  def exactByFingerprint(df: DataFrame, contentCol: String, idCol: String): DataFrame =
-    df.select(col(idCol),
+  def exactByFingerprint(df: DataFrame, contentCol: String, idCol: String,
+                         carry: Seq[String] = Nil): DataFrame =
+    df.select((Seq(col(idCol),
         xxhash64(col(contentCol)).as("fp_a"),
-        xxhash64(lit("graft-fp2"), col(contentCol)).as("fp_b"))
+        xxhash64(lit("graft-fp2"), col(contentCol)).as("fp_b")) ++
+        carry.map(col)): _*)
       .groupBy(col("fp_a"), col("fp_b"))
-      .agg(min(col(idCol)).as("keeper_id"), count(lit(1)).as("n_copies"))
+      .agg(min(col(idCol)).as("keeper_id"),
+        (count(lit(1)).as("n_copies") +:
+          carry.map(c => min_by(col(c), col(idCol)).as(c))): _*)
 
   /** k-word shingle set of a whitespace-tokenized text column; documents
     * shorter than k words contribute their whole text as one shingle.
@@ -575,15 +582,19 @@ object Dedup {
     *
     * @param store existing fingerprints: (fp_a, fp_b) — extra columns
     *        ignored
-    * @return (id, fp_a, fp_b) — one row per surviving NEW document
-    *         (within-batch keeper AND absent from the store)
+    * @param carry batch columns to return as the keeper's values (e.g.
+    *        the content itself, so a caller needs no join back to the
+    *        batch to recover it)
+    * @return (id, fp_a, fp_b, carry...) — one row per surviving NEW
+    *         document (within-batch keeper AND absent from the store)
     */
   def exactIncremental(batch: DataFrame, contentCol: String, idCol: String,
-                       store: DataFrame): DataFrame = {
+                       store: DataFrame, carry: Seq[String] = Nil): DataFrame = {
     // step 1 IS exactByFingerprint — shared code so the incremental
     // path can never diverge from the batch fingerprint scheme
-    val keepers = exactByFingerprint(batch, contentCol, idCol)
-      .select(col("keeper_id").as("id"), col("fp_a"), col("fp_b"))
+    val keepers = exactByFingerprint(batch, contentCol, idCol, carry)
+      .select((Seq(col("keeper_id").as("id"), col("fp_a"), col("fp_b")) ++
+        carry.map(col)): _*)
     val st = store.select(col("fp_a"), col("fp_b"))
     // Null-content handling needs NO special path: Spark's xxhash64 is
     // NOT null-propagating (HashExpression.nullable is hardwired
@@ -597,7 +608,7 @@ object Dedup {
     // Exchange-free (BucketedSpec).
     keepers
       .join(st, Seq("fp_a", "fp_b"), "left_anti")
-      .select(col("id"), col("fp_a"), col("fp_b"))
+      .select((Seq(col("id"), col("fp_a"), col("fp_b")) ++ carry.map(col)): _*)
   }
 
   /** One-row SCHEME MANIFEST for a persisted LSH store set — the
@@ -661,14 +672,16 @@ object Dedup {
     * store rows of [[lshIncremental]]. Build once over the existing
     * corpus to bootstrap the store; thereafter each batch's surviving
     * rows are appended. Null text is dropped ([[minhashLsh]]'s
-    * rationale: unknown text must not be declared a duplicate). */
+    * rationale: unknown text must not be declared a duplicate).
+    * `carry` columns of `df` ride along after (id, sig). */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-                        shingleK: Int = 3, numHashes: Int = 64): DataFrame =
+                        shingleK: Int = 3, numHashes: Int = 64,
+                        carry: Seq[String] = Nil): DataFrame =
     df.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("id"),
+      .select((Seq(col(idCol).as("id"),
         call_function("graft_minhash_sig",
           call_function("graft_shingle_hashes", col(textCol), lit(shingleK)),
-          lit(numHashes)).as("sig"))
+          lit(numHashes)).as("sig")) ++ carry.map(col)): _*)
 
   /** Incremental MinHash-LSH NEAR-dedup — the near-duplicate twin of
     * [[exactIncremental]], the continuous-ingest shape: admit from a
@@ -732,17 +745,22 @@ object Dedup {
     *        Default false: the chain-pessimistic admits-only store,
     *        whose admit set is batch-split-DEPENDENT on chain tails
     *        (spec'd in LlmSpec)
-    * @return (id, sig) — admitted batch rows, ready to append to the
-    *         store; with `splitInvariant`, (id, sig, admitted) — ALL
-    *         batch reps, EVERY row appended, `admitted` marking the
-    *         actually-new documents
+    * @param carry batch columns returned with each rep, as the rep's
+    *        (min-id doc's) values — they ride the rep aggregation, so a
+    *        caller needs no join back to the batch (names other than
+    *        `id`, `sig` and `admitted`)
+    * @return (id, sig, carry...) — admitted batch rows, ready to append
+    *         to the store; with `splitInvariant`, (id, sig, carry...,
+    *         admitted) — ALL batch reps, EVERY row appended, `admitted`
+    *         marking the actually-new documents
     */
   def lshIncremental(batch: DataFrame, idCol: String, textCol: String,
                      store: DataFrame, shingleK: Int = 3, numHashes: Int = 64,
                      bands: Int = 16, threshold: Double = 0.9,
                      maxBucket: Int = 10000,
                      manifest: Option[DataFrame] = None,
-                     splitInvariant: Boolean = false): DataFrame = {
+                     splitInvariant: Boolean = false,
+                     carry: Seq[String] = Nil): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
     manifest.foreach(requireManifest(_, "lshIncremental", Some(shingleK), numHashes, bands))
@@ -753,7 +771,7 @@ object Dedup {
         posexplode(call_function("graft_band_keys_sig", col("sig"), lit(bands))))
       .toDF("sid", "band", "key")
     lshIncrementalBands(batch, idCol, textCol, store0, storeBands,
-      shingleK, numHashes, bands, threshold, maxBucket, splitInvariant)
+      shingleK, numHashes, bands, threshold, maxBucket, splitInvariant, carry)
   }
 
   /** The exploded (id, band, key) index rows for a signature store —
@@ -803,6 +821,7 @@ object Dedup {
     *                  signatures from here
     * @param bandIndex (id, band, key) rows — [[lshBandIndex]] of the
     *                  same store
+    * @param carry     as in [[lshIncremental]]
     */
   def lshIncrementalIndexed(batch: DataFrame, idCol: String, textCol: String,
                             sigStore: DataFrame, bandIndex: DataFrame,
@@ -810,7 +829,8 @@ object Dedup {
                             bands: Int = 16, threshold: Double = 0.9,
                             maxBucket: Int = 10000,
                             manifest: Option[DataFrame] = None,
-                            splitInvariant: Boolean = false): DataFrame = {
+                            splitInvariant: Boolean = false,
+                            carry: Seq[String] = Nil): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
     // the manifest is what closes the FEWER-bands index hole described
@@ -840,7 +860,7 @@ object Dedup {
         .otherwise(col("band")).as("band"),
       col("key"))
     lshIncrementalBands(batch, idCol, textCol, store0, storeBands,
-      shingleK, numHashes, bands, threshold, maxBucket, splitInvariant)
+      shingleK, numHashes, bands, threshold, maxBucket, splitInvariant, carry)
   }
 
   /** Signature-agreement Jaccard estimate (E[agree/n] = J). */
@@ -897,18 +917,29 @@ object Dedup {
                                   storeBands: DataFrame, shingleK: Int,
                                   numHashes: Int, bands: Int,
                                   threshold: Double, maxBucket: Int,
-                                  splitInvariant: Boolean = false): DataFrame = {
+                                  splitInvariant: Boolean,
+                                  carry: Seq[String]): DataFrame = {
+    require(!carry.exists(Set("id", "sig", "admitted")),
+      s"carry columns must not be named id, sig or admitted: $carry")
     // exact-signature collapse (min id per distinct signature): est
     // Jaccard between identical signatures is 1 ≥ any threshold, so
     // non-reps are dropped by the rule directly; two-seed fingerprint
-    // for the same collision reason as [[minhashLsh]]'s groups
-    val sigs = minhashSignatures(batch, idCol, textCol, shingleK, numHashes)
+    // for the same collision reason as [[minhashLsh]]'s groups. The
+    // carried columns take the rep's values in the same aggregation.
+    // Persisted: every consumer below reads it, so the batch lineage
+    // under it (in incrementalCurate: the gate and the exact stage)
+    // runs once.
+    val sigs = minhashSignatures(batch, idCol, textCol, shingleK, numHashes, carry)
     val reps = graft.dsl.Rel.track(sigs
-      .groupBy(xxhash64(col("sig")).as("fp_a"),
-        xxhash64(lit("graft-fp2"), col("sig")).as("fp_b"))
-      .agg(min(col("id")).as("id"), min_by(col("sig"), col("id")).as("sig"))
-      .select(col("id"), checkedSig(col("sig"), "batch", numHashes).as("sig"))
+      .groupBy(xxhash64(col("sig")).as("graft_rep_fa"),
+        xxhash64(lit("graft-fp2"), col("sig")).as("graft_rep_fb"))
+      .agg(min(col("id")).as("id"),
+        (min_by(col("sig"), col("id")).as("sig") +:
+          carry.map(c => min_by(col(c), col("id")).as(c))): _*)
+      .select((Seq(col("id"), checkedSig(col("sig"), "batch", numHashes).as("sig")) ++
+        carry.map(col)): _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val repSigs = reps.select(col("id"), col("sig"))
 
     val repBands = reps.select(col("id"),
         posexplode(call_function("graft_band_keys_sig", col("sig"), lit(bands))))
@@ -919,8 +950,8 @@ object Dedup {
     val withinDropped = bucketPairs(repBands, Seq("band", "key"), col("id"), maxBucket)
       .filter(col("a") < col("b"))
       .distinct()
-      .join(reps.toDF("a", "sa"), "a")
-      .join(reps.toDF("b", "sb"), "b")
+      .join(repSigs.toDF("a", "sa"), "a")
+      .join(repSigs.toDF("b", "sb"), "b")
       .filter(estJaccard(col("sa"), col("sb"), numHashes) >= threshold)
       .select(col("b").as("id"))
 
@@ -936,7 +967,7 @@ object Dedup {
     val crossDropped = repBands.join(storeBuckets, Seq("band", "key"))
       .select(col("id"), explode(col("ds")).as("sid"))
       .distinct()
-      .join(reps, "id")
+      .join(repSigs, "id")
       .join(store0.select(col("id").as("sid"), col("sig").as("ssig")), "sid")
       .filter(estJaccard(col("sig"), col("ssig"), numHashes) >= threshold)
       .select(col("id"))
@@ -950,8 +981,8 @@ object Dedup {
     else reps
       .join(dropped.distinct().select(col("id"), lit(true).as("graft_si_dropped")),
         Seq("id"), "left_outer")
-      .select(col("id"), col("sig"),
-        col("graft_si_dropped").isNull.as("admitted"))
+      .select((Seq(col("id"), col("sig")) ++ carry.map(col) :+
+        col("graft_si_dropped").isNull.as("admitted")): _*)
   }
 
   /** Global sentence-level exact dedup — the C4/Dolma "keep one copy

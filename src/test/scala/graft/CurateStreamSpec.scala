@@ -283,6 +283,68 @@ class CurateStreamSpec extends SparkSuite {
     } finally dropTables(p)
   }
 
+  test("ingestBatch: no cached plan over the store tables is left once the result is checkpointed") {
+    val p = "gstr_cm"
+    val (fpT, sigT, idxT, manT, ledT) = mkTables(p)
+    val stores = Set(fpT, sigT, idxT)
+    // the session's cached plans (CacheManager keeps its list private)
+    def cachedStoreReads(): Seq[String] = {
+      val cm = spark.sharedState.cacheManager
+      val m = cm.getClass.getDeclaredMethod("cachedData")
+      m.setAccessible(true)
+      m.invoke(cm).asInstanceOf[Seq[org.apache.spark.sql.execution.CachedData]]
+        .flatMap(_.plan.collectLeaves().collect {
+          case r: org.apache.spark.sql.execution.datasources.LogicalRelation
+              if r.catalogTable.exists(t => stores(t.identifier.table)) =>
+            r.catalogTable.get.identifier.table
+        })
+    }
+    try {
+      val seen = scala.collection.mutable.Buffer[Seq[String]]()
+      batches.zipWithIndex.foreach { case (rows, i) =>
+        Curate.ingestBatch(rows.toDF("doc_id", "text"), i.toLong, "doc_id", "text",
+          fpT, sigT, idxT, B, manifestTable = Some(manT), ledgerTable = Some(ledT),
+          threshold = 0.5, onAdmitted = (_, _) => seen += cachedStoreReads())
+      }
+      assert(seen.size == batches.size && seen.forall(_.isEmpty), seen.toString)
+    } finally dropTables(p)
+  }
+
+  test("ingestBatch compiles no generated class once a batch of the same shape has run") {
+    // the codegen cache bound (Graft.configure) holds a batch's working
+    // set, and the ledger check's generated code does not depend on the
+    // batch id; with Spark's 100-entry default every batch recompiled
+    // ~90 classes
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      Graft.CodegenCacheEntries.toString)
+    val p = "gstr_cg"
+    val (fpT, sigT, idxT, manT, ledT) = mkTables(p)
+    def compiles() =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // each batch: fresh docs, an exact copy and a near copy of the
+    // previous batch's docs (store hits), a within-batch copy, a gate fail
+    def batch(b: Int): Seq[(Long, String)] = {
+      def doc(i: Int) = (1 to 40).map(w => s"b${i}w$w").mkString(" ")
+      val fresh = (0 until 4).map(j => (b * 100L + j, doc(b * 10 + j)))
+      val prev = if (b == 0) Nil else Seq(
+        (b * 100L + 50, doc((b - 1) * 10)),
+        (b * 100L + 51, doc((b - 1) * 10 + 1).replace("w20 ", "X20 ")))
+      fresh ++ prev ++ Seq((b * 100L + 60, fresh.head._2),
+        (b * 100L + 61, "spam spam spam spam"))
+    }
+    try {
+      val added = (0 until 3).map { b =>
+        val c0 = compiles()
+        Curate.ingestBatch(batch(b).toDF("doc_id", "text"), b.toLong, "doc_id", "text",
+          fpT, sigT, idxT, B, manifestTable = Some(manT), ledgerTable = Some(ledT),
+          threshold = 0.5)
+        compiles() - c0
+      }
+      assert(spark.table(fpT).count() == 12L) // 4 fresh admits per batch
+      assert(added(2) <= 1L, s"compiles per batch: $added")
+    } finally dropTables(p)
+  }
+
   test("streamingIngest fails at wiring time: missing store table, wrong manifest scheme") {
     val p = "gstr_w"
     mkTables(p)

@@ -28,9 +28,9 @@ object Curate {
     // runs twice, 2× the scan cost at corpus scale. Tracked so the
     // application releases it after the consuming action (Rel scaladoc).
     val cleaned = graft.dsl.Rel.track(
-      // srcCol rides THROUGH the boilerplate stage (passthrough) — the
-      // old re-attach join read the corpus a second time and added an
-      // unacknowledged corpus-wide shuffle (r17 review)
+      // srcCol rides THROUGH the boilerplate stage (passthrough): a
+      // re-attach join would read the corpus a second time and add a
+      // corpus-wide shuffle
       Text.removeBoilerplate(docs, idCol, textCol, ". ", boilerMaxDf,
           passthrough = Seq(srcCol))
         .withColumnRenamed("doc", idCol)
@@ -69,17 +69,15 @@ object Curate {
       // "fp" must survive untouched (graft_-prefix convention).
       // The key is exactByFingerprint's EXACT xxhash64 pair — a true
       // 128-bit-class key, AND interoperable with the batch/incremental
-      // fingerprint store (pre-r17 the first component was the rolling
-      // graft_fingerprint, so stream keys could never be seeded from
-      // or reconciled against the batch fpStore despite the scaladoc's
-      // same-kernels claim; r17 review)
+      // fingerprint store, so stream keys can be seeded from or
+      // reconciled against the batch fpStore (the same-kernels claim)
       .withColumn("graft_curate_fp", xxhash64(col(textCol)))
       .withColumn("graft_curate_fp2", xxhash64(lit("graft-fp2"), col(textCol)))
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark("graft_curate_fp", "graft_curate_fp2")
       .drop("graft_curate_fp", "graft_curate_fp2") // schema matches input
 
-  /** Tokenizer-aware sequence packing (the r17 capstone, q125): the
+  /** Tokenizer-aware sequence packing (q125): the
     * shape every real pretraining pipeline runs — sliding-window
     * [[Text.chunk]] → BPE-encode each chunk ([[Bpe.encode]]'s
     * codegen'd `graft_bpe_tokens` kernel, merges as a foldable plan
@@ -114,14 +112,11 @@ object Curate {
     // un-persisted pipeline paid it twice). The q78 lesson does not
     // apply: what persists is counts + chunk text already materialized
     // by the explode, not an avoidable extra corpus scan.
-    // PARALLELIZE THE KERNEL (r22, guide §2.5 input parallelism): the
-    // encode is the pipeline's dominant compute (OPTIMIZATION_r22.md
-    // §1, 1×:
-    // encode 3.0 s warm of q125's ~4.2 s total — and the r21 scaling
-    // block read q125 at ratio 1.03, i.e. the SAME time at 8 and 32
-    // cores: serial). Chunk rows inherit the docs scan's partitioning,
-    // so a corpus arriving as few/unsplittable files runs the expensive
-    // per-chunk kernel on that few cores. When the scan under-
+    // PARALLELIZE THE KERNEL: the encode is the pipeline's dominant
+    // compute (at sf0.01, encode 3.0 s warm of q125's ~4.2 s total, and
+    // the SAME time at 8 and 32 cores: serial). Chunk rows inherit the
+    // docs scan's partitioning, so a corpus arriving as few/unsplittable
+    // files runs the expensive per-chunk kernel on that few cores. When the scan under-
     // partitions the session's parallelism, round-robin the chunk rows
     // first — one batch shuffle of chunk text buys a fully parallel
     // encode. Results unchanged: n_tokens is per-row, and the prefix
@@ -143,7 +138,7 @@ object Curate {
       .withColumn("bin", expr(s"(cum_tokens - n_tokens) div ${seqTokens}L"))
   }
 
-  /** Incremental-ingest curation capstone (r17, q126) — the production
+  /** Incremental-ingest curation capstone (q126) — the production
     * "ingest today's batch against yesterday's corpus" shape, composing
     * the three continuous-ingest pieces end to end:
     *
@@ -155,10 +150,11 @@ object Curate {
     *   (near-dup admit rule, store text never rescanned).
     *
     * Returns one row per ADMITTED document carrying everything both
-    * stores need appended — (id, fp_a, fp_b, sig) — so the caller's
-    * ingest loop is: admitted = incrementalCurate(...); append
-    * (fp_a, fp_b) to the fingerprint store, (id, sig) to the signature
-    * store; repeat next batch. Corpus-sized inputs touch only the two
+    * stores need appended — (id, fp_a, fp_b, sig). The ingest loop
+    * around it — append (fp_a, fp_b) to the fingerprint store, (id, sig)
+    * and its band-index rows to the signature side, repeat next batch —
+    * is [[SessionStores]] in-session and [[ingestBatch]] against durable
+    * tables. Corpus-sized inputs touch only the two
     * stores (24 B and 8·numHashes B per admitted doc); everything
     * else is batch-sized — the scale contract inherited from the two
     * incremental operators unchanged.
@@ -186,7 +182,7 @@ object Curate {
     *        row-local check can see); at real scale keep the one-row
     *        manifest table next to the stores and always pass it
     * @param splitInvariant opt-in batch-split-invariant admit
-    *        semantics (r19): the near-dedup leg returns EVERY surviving
+    *        semantics: the near-dedup leg returns EVERY surviving
     *        rep with an `admitted` boolean and the caller appends ALL
     *        returned rows' (id, sig) — and their band-index rows — to
     *        the signature store, while the FINGERPRINT store still
@@ -241,8 +237,8 @@ object Curate {
     * (spec-validated, so the zero-Exchange co-location contract cannot
     * silently break).
     *
-    * RECACHE DISCIPLINE (the q129 finding, `ops/Bucketed.scala`
-    * appendBucketed scaladoc): the admit frame's lineage reads the very
+    * RECACHE DISCIPLINE (`ops/Bucketed.scala` appendBucketed
+    * scaladoc): the admit frame's lineage reads the very
     * tables the appends mutate, and each append's catalog refresh
     * RECACHES dependent cached plans — so the frame is severed with
     * `localCheckpoint()` BEFORE the first append; `persist()` would
@@ -261,8 +257,8 @@ object Curate {
     *    them yet) and re-derives the same idx rows — which the
     *    (band, key, id) anti-join against the idx table then removes,
     *    so NOTHING is re-appended and index ≡ lshBandIndex(sig)
-    *    survives this window too (r21; previously the replay appended
-    *    duplicate band rows that broke the multiset equality until a
+    *    survives this window too (without it the replay would append
+    *    duplicate band rows that break the multiset equality until a
     *    rebuild). Cost on a normal batch: one Exchange-free scan of
     *    the bucketed idx table per trigger — the fp-anti-join class;
     *  - after sig, before fp: the re-run admits nothing (est Jaccard 1
@@ -333,9 +329,7 @@ object Curate {
       // refresh re-plans a cached plan over the stores
       graft.dsl.Rel.releaseTracked(blocking = true)
       onAdmitted(res, batchId)
-      // sig + index rows: every returned rep (= every SEEN rep in
-      // split-invariant mode, admits only in default mode); fp rows:
-      // admitted docs only — the incrementalCurate append contract.
+      val (fpRows, resSigRows) = appendRows(res)
       // Split-invariant replay idempotency: the result frame holds
       // every seen rep, so a crash-replay whose sig rows already
       // landed would re-append them all — anti-join by id against the
@@ -351,18 +345,16 @@ object Curate {
       // appends.
       val sigRows =
         if (splitInvariant)
-          res.select(col("id"), col("sig"))
+          resSigRows
             .join(s.table(sigTable).select(col("id")), Seq("id"), "left_anti")
             .localCheckpoint()
-        else res.select(col("id"), col("sig"))
-      val fpRows = (if (splitInvariant) res.filter(col("admitted")) else res)
-        .select(col("fp_a"), col("fp_b"))
-      // idx-append replay idempotency (r20 ADVICE, the remaining
-      // idx-before-sig crash window — BOTH modes): a crash after the
-      // idx append but before the sig append leaves idx rows landed
-      // with sig empty; the replay then admits the SAME set (its
-      // candidates verify against the sig table, which has no rows for
-      // them) and would re-append every band row — duplicates that
+        else resSigRows
+      // idx-append replay idempotency (the idx-before-sig crash window,
+      // BOTH modes): a crash after the idx append but before the sig
+      // append leaves idx rows landed with sig empty; the replay then
+      // admits the SAME set (its candidates verify against the sig
+      // table, which has no rows for them) and would re-append every
+      // band row — duplicates that
       // break the idx ≡ lshBandIndex(sig) invariant until a rebuild.
       // Anti-join the batch's band rows against the idx table on
       // (band, key, id): on a normal batch it removes nothing and costs
@@ -396,8 +388,8 @@ object Curate {
     }
   }
 
-  /** Continuous streaming ingest — the q128/q129 batch loop as a
-    * Structured Streaming pipeline (the production shape: the batch
+  /** Continuous streaming ingest — the [[SessionStores]] batch loop as
+    * a Structured Streaming pipeline (the production shape: the batch
     * engine curates the backfill, this curates the live feed with the
     * SAME [[incrementalCurate]] kernel against the SAME durable
     * bucketed tables, so batch and stream agree by construction).
@@ -458,15 +450,80 @@ object Curate {
     }
   }
 
+  /** The append contract of [[incrementalCurate]]'s result, for every
+    * store implementation: (fp rows, sig rows). Sig rows — and the
+    * band-index rows derived from them — come from EVERY returned rep;
+    * fp rows from admitted rows only. A split-invariant result carries
+    * an `admitted` column and holds every seen rep; a default-mode
+    * result holds admits only.
+    */
+  private def appendRows(res: DataFrame): (DataFrame, DataFrame) = {
+    val admitted =
+      if (res.columns.contains("admitted")) res.filter(col("admitted")) else res
+    (admitted.select(col("fp_a"), col("fp_b")), res.select(col("id"), col("sig")))
+  }
+
+  /** In-session dedup state for a batch loop — the in-memory
+    * counterpart of the durable tables [[ingestBatch]] appends to. Each
+    * store is a lazy union of per-batch deltas over checkpointed result
+    * frames. The scheme (`shingleK`, `numHashes`, `bands`) is fixed when
+    * the value is built ([[SessionStores.empty]]), so the curate call
+    * and the band-index deltas cannot disagree.
+    *
+    * Lineage: [[incrementalCurate]] self-joins its store inputs, so an
+    * un-cut plan grows multiplicatively per batch (`persist()` does not
+    * cut the logical plan). Each [[ingest]] step `localCheckpoint`s its
+    * result — the in-session stand-in for a table boundary — so every
+    * delta is a flat RDD scan and plans stay linear in batches, without
+    * rewriting the accumulated stores per batch.
+    *
+    * @param idx the band index of `sig`; when present, the near stage
+    *        probes it ([[Dedup.lshIncrementalIndexed]]) and every step
+    *        appends the new sig rows' band rows to it
+    */
+  final class SessionStores private (val fp: DataFrame, val sig: DataFrame,
+      val idx: Option[DataFrame], idCol: String, textCol: String,
+      shingleK: Int, numHashes: Int, bands: Int) {
+
+    /** Curates `batch` against these stores.
+      * @return the checkpointed [[incrementalCurate]] result, and the
+      *         stores with its rows appended under [[appendRows]]
+      */
+    def ingest(batch: DataFrame, threshold: Double = 0.9,
+               manifest: Option[DataFrame] = None,
+               splitInvariant: Boolean = false): (DataFrame, SessionStores) = {
+      val res = incrementalCurate(batch, idCol, textCol, fp, sig,
+          shingleK = shingleK, numHashes = numHashes, bands = bands,
+          threshold = threshold, bandIndex = idx, manifest = manifest,
+          splitInvariant = splitInvariant)
+        .localCheckpoint()
+      val (fpRows, sigRows) = appendRows(res)
+      (res, new SessionStores(fp.unionByName(fpRows), sig.unionByName(sigRows),
+        idx.map(_.unionByName(Dedup.lshBandIndex(sigRows, numHashes, bands))),
+        idCol, textCol, shingleK, numHashes, bands))
+    }
+  }
+
+  object SessionStores {
+    /** Empty stores ([[emptyStores]]) for `docs`' id and text columns;
+      * `indexed` keeps a band index beside the sig store. */
+    def empty(docs: DataFrame, idCol: String, textCol: String,
+              shingleK: Int = 3, numHashes: Int = 64, bands: Int = 16,
+              indexed: Boolean = false): SessionStores = {
+      val (fp0, sig0, idx0) = emptyStores(docs, idCol, textCol, shingleK,
+        numHashes, bands)
+      new SessionStores(fp0, sig0, if (indexed) Some(idx0) else None,
+        idCol, textCol, shingleK, numHashes, bands)
+    }
+  }
+
   /** EMPTY (fpStore, sigStore, bandIndex) frames for bootstrapping an
     * ingest loop from nothing — derived THROUGH the operators' own
     * expressions from `docs.limit(0)`, so the store schemas can never
-    * drift from what [[incrementalCurate]] appends. ONE definition:
-    * the q128/q129 driver queries each built these by hand (r19
-    * review — hand-typed `toDF` schemas, exactly the drift the
-    * derive-through-operators rule exists to prevent). Callers
-    * `localCheckpoint()` the frames (in-session loop) or `writeBucketed`
-    * them (durable tables).
+    * drift from what [[incrementalCurate]] appends (hand-typed `toDF`
+    * schemas would). [[SessionStores.empty]] starts its in-session
+    * stores from them as they are (empty relations, nothing to
+    * checkpoint); durable stores `writeBucketed` them as tables.
     */
   def emptyStores(docs: DataFrame, idCol: String, textCol: String,
                   shingleK: Int = 3, numHashes: Int = 64,

@@ -1377,13 +1377,13 @@ object LlmQueries {
           "indexed_equals_sig_path")
     }),
 
-    // multi-batch ingest-LOOP capstone (r18, VERDICT task 1): q126/q127
-    // each ingest ONE batch against a fresh store; this exercises the
-    // promised production loop — "append admitted rows, repeat next
-    // batch" — over 3 successive batches with stores that START EMPTY
-    // and grow by exactly each round's admits (fingerprints, signatures
-    // AND band-index rows, all three appends, validated by the
-    // persisted lshManifest every round). Loop invariants asserted:
+    // multi-batch ingest LOOP over in-session stores: q126/q127 each
+    // ingest ONE batch against a fresh store; this runs the production
+    // loop — "append admitted rows, repeat next batch" — over 3
+    // successive batches with stores that START EMPTY and grow by
+    // exactly each round's admits (fingerprints, signatures AND
+    // band-index rows, Curate.SessionStores), validated by the persisted
+    // lshManifest every round. Loop invariants asserted:
     //  * no re-ingested exact copy of an earlier ADMIT is ever admitted
     //    (round i's batch deliberately re-ingests round i-1's admits)
     //  * re-ingesting round i's admits against the post-round store
@@ -1407,67 +1407,29 @@ object LlmQueries {
       def track(df: DataFrame): DataFrame = graft.dsl.Rel.track(df)
       val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val man = Dedup.lshManifest(s) // shingleK=3, numHashes=64, bands=16, v1
-      val q = Text.qualityScore(col("text"))
-      // corpus scalars (row count, quality-pass count, copy-id base) in
-      // ONE aggregation pass — was three separate actions (r21, guide
-      // §1.2: fewer passes). copyBase stays max(id)+1, DERIVED from the
-      // data, not a hardcoded 1000000L
-      // (r18 review: a corpus with doc_id >= 1e6 — the repo's own
-      // salted/256x fixtures build such ids — would miscount a real
-      // admit as a re-ingested copy and could collide copy ids with
-      // real ids). Rounds use copyBase*(i+1), the reingest probe
-      // copyBase*4; real ids are always < copyBase.
-      val hdr = d.agg(count(lit(1)), count(when(q >= 0.5, lit(1))),
-        max(col("doc_id"))).head()
-      val nDocs = hdr.getLong(0)
-      val nQualityPass = hdr.getLong(1)
-      val copyBase = if (hdr.isNullAt(2)) 1L else hdr.getLong(2) + 1L
-      // stores start EMPTY — the loop is bootstrapped from nothing,
-      // schemas derived through the operators (Curate.emptyStores).
-      // LINEAGE DISCIPLINE: in production each append writes to a
-      // TABLE, so every round's ingest plans against a flat scan. A
-      // persist() does NOT give that — the logical plan still nests the
-      // whole previous round (incrementalCurate self-joins its inputs,
-      // so the un-cut plan grows MULTIPLICATIVELY per round; the first
-      // attempt spent >10 min inside plan-tree stringification alone).
-      // localCheckpoint (eager) is the in-session stand-in for the
-      // table boundary: it cuts the plan to an RDD scan each round.
-      // r21 shape: ONE localCheckpoint per round — the round's admit
-      // frame — and each store is a lazy UNION of the per-round DELTA
-      // projections of those flat RDD scans (limit(0) bootstrap frames
-      // fold to empty relations), so plans stay linear in rounds while
-      // the three per-round full-store re-materializations (plus the
-      // separate admittedDocs checkpoint) collapse into that one job —
-      // the same append-only discipline a table gives, without
-      // rewriting the accumulated store every round.
-      val (fp0, sig0, idx0) = graft.llm.Curate.emptyStores(d, "doc_id", "text")
-      var fpStore: DataFrame = fp0
-      var sigStore: DataFrame = sig0
-      var bandIdx: DataFrame = idx0
-      var prevAdmittedDocs = Seq.empty[(Long, String)].toDF("id", "text")
+      // rounds re-key copies by copyBase*(i+1), the reingest probe by
+      // copyBase*4; real ids are always < copyBase
+      val (nDocs, nQualityPass, copyBase) = QCommon.ingestHeader(d)
+      var stores = graft.llm.Curate.SessionStores.empty(d, "doc_id", "text",
+        indexed = true)
+      var prevAdmittedDocs = d.limit(0).select(col("doc_id").as("id"), col("text"))
       var noCopyAdmitted = true
       var reingestNothing = true
       var admitsSubset = true
       val admitsPerRound = new scala.collection.mutable.ArrayBuffer[DataFrame]
       for (i <- 0 until 3) {
-        // round i = base slice (doc_id % 3 == i) + exact copies of the
-        // PREVIOUS round's admits under fresh ids — every copy must be
-        // rejected by the fingerprint store the loop just appended to
-        val batch = track(d.filter(pmod(col("doc_id"), lit(3)) === i)
-          .unionByName(prevAdmittedDocs.select(
-            (col("id") + copyBase * (i + 1)).as("doc_id"), col("text")))
+        val batch = track(QCommon.roundBatch(d, prevAdmittedDocs, copyBase, i)
           .persist(ML))
-        // the round's ONE materialization: admits LEFT-joined to the
-        // batch (re-attaching text; a null doc_id would mark a non-
-        // subset admit) — severs the store lineage and feeds the
-        // booleans, the three store deltas and the next round's copies
-        val admFull = graft.llm.Curate.incrementalCurate(
-            batch, "doc_id", "text", fpStore, sigStore,
-            bandIndex = Some(bandIdx), manifest = Some(man))
-          .join(batch, col("id") === col("doc_id"), "left")
+        val (res, next) = stores.ingest(batch, manifest = Some(man))
+        stores = next
+        // admits LEFT-joined to the batch (re-attaching text; a null
+        // doc_id marks a non-subset admit) — feeds the booleans and the
+        // next round's copies. Checkpointed, not persisted: the
+        // persisted join measured slower over the loop (BENCH_NOTES,
+        // "One ingest path for the capstones")
+        val admFull = res.join(batch, col("id") === col("doc_id"), "left")
           .localCheckpoint()
-        // both per-round booleans in ONE aggregation (was two count
-        // actions); count(when(...)) never nulls on an empty frame
+        // count(when(...)) never nulls on an empty frame
         val bs = admFull.agg(
           count(when(col("id") >= copyBase, lit(1))),
           count(when(col("doc_id").isNull, lit(1)))).head()
@@ -1475,26 +1437,20 @@ object LlmQueries {
         admitsSubset &&= bs.getLong(1) == 0L
         val admittedDocs = admFull.filter(col("doc_id").isNotNull)
           .select(col("id"), col("text"))
-        // the three appends — lazy delta unions over the checkpointed
-        // admit frame (see the store-discipline note above)
-        fpStore = fpStore.unionByName(admFull.select(col("fp_a"), col("fp_b")))
-        sigStore = sigStore.unionByName(admFull.select(col("id"), col("sig")))
-        bandIdx = bandIdx.unionByName(
-          Dedup.lshBandIndex(admFull.select(col("id"), col("sig")),
-            manifest = Some(man)))
         // closed-loop check: this round's admits, re-ingested under new
         // ids against the JUST-APPENDED stores, admit nothing
         reingestNothing &&= graft.llm.Curate.incrementalCurate(
           admittedDocs.select((col("id") + copyBase * 4).as("doc_id"), col("text")),
-          "doc_id", "text", fpStore, sigStore,
-          bandIndex = Some(bandIdx), manifest = Some(man)).isEmpty
+          "doc_id", "text", stores.fp, stores.sig,
+          bandIndex = stores.idx, manifest = Some(man)).isEmpty
         admitsPerRound += admittedDocs.withColumn("round", lit(i))
         prevAdmittedDocs = admittedDocs
       }
+      val sigStore = stores.sig
       val allAdmits = track(admitsPerRound.reduce(_ unionByName _).persist(ML))
       // admit count + cross-round exact in ONE job: the sum of per-text
       // group counts IS the row count, a max group count > 1 IS a
-      // shared text (was two actions)
+      // shared text
       val tg = allAdmits.groupBy(col("text")).agg(count(lit(1)).as("c"))
         .agg(coalesce(sum(col("c")), lit(0L)),
           coalesce(max(col("c")), lit(0L))).head()
@@ -1519,17 +1475,16 @@ object LlmQueries {
         .join(sigStore.toDF("b", "sb"), "b")
         .filter(est >= 0.9).count() == 0L
       // appended-index contract: the accumulated index IS the index of
-      // the accumulated signature store — ONE tagged-union aggregation
-      // (QCommon.multisetEqual) instead of two exceptAll actions
-      val fullIdx = Dedup.lshBandIndex(sigStore)
-      val idxMatches = QCommon.multisetEqual(bandIdx, fullIdx)
+      // the accumulated signature store
+      val idxMatches = QCommon.multisetEqual(stores.idx.get,
+        Dedup.lshBandIndex(sigStore))
       // manifest guard live in the loop's own shape: a wrong-scheme
       // call against these stores fails loudly before any work
       val wrongManifestFails =
         try {
           graft.llm.Curate.incrementalCurate(
-            d.limit(1), "doc_id", "text", fpStore, sigStore,
-            bands = 8, bandIndex = Some(bandIdx), manifest = Some(man))
+            d.limit(1), "doc_id", "text", stores.fp, sigStore,
+            bands = 8, bandIndex = stores.idx, manifest = Some(man))
           false
         } catch { case _: IllegalArgumentException => true }
       val admitsBounded = nAdmitted <= nQualityPass
@@ -1543,19 +1498,18 @@ object LlmQueries {
           "wrong_manifest_fails", "admits_bounded_by_gate")
     }),
 
-    // DURABLE-table ingest loop (r19, VERDICT task 1): q128 proves the
-    // loop's semantics over in-session localCheckpoint frames and names
-    // bucketed TABLES as the production shape — this runs that shape:
-    // (fpStore, sigStore, bandIndex) live as bucketed tables in
-    // spark-warehouse, bootstrapped EMPTY under the operators' own
-    // schemas, each round appending via Bucketed.appendBucketed (which
-    // validates the bucket+sort spec, so the zero-Exchange co-location
-    // contract cannot silently break), the manifest riding as its own
-    // one-row table. Asserted:
-    //  * admit PARITY with the in-session localCheckpoint loop on the
-    //    SAME batches (the operator is deterministic; any divergence
+    // DURABLE-table ingest loop: q128's loop in its production shape —
+    // (fp, sig, idx) stores as bucketed TABLES in spark-warehouse,
+    // bootstrapped EMPTY under the operators' own schemas, each round
+    // one Curate.ingestBatch (no ledger: this in-query loop never
+    // replays a round), whose appends go through Bucketed.appendBucketed
+    // (which validates the bucket+sort spec, so the zero-Exchange
+    // co-location contract cannot silently break), the manifest riding
+    // as its own one-row table. Asserted:
+    //  * admit PARITY with the in-session Curate.SessionStores twin on
+    //    the SAME batches (the operator is deterministic; any divergence
     //    would be durable-path drift — append misrouting, schema
-    //    mangling, sort weakening)
+    //    mangling, sort weakening, a recomputed admit frame)
     //  * no re-ingested exact copy of an earlier admit is admitted by
     //    the TABLE-backed fingerprint store
     //  * the post-append band-index bucket aggregation plans with ZERO
@@ -1570,122 +1524,23 @@ object LlmQueries {
     // the bucket count to the cluster (thousands at 100 TB).
     "q129_ingest_loop_tables" -> ((s, dir) => {
       import s.implicits._
-      val ML = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val B = 4
-      val Bk = graft.ops.Bucketed
       val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val man = Dedup.lshManifest(s)
-      val q = Text.qualityScore(col("text"))
-      // corpus scalars in ONE pass (the q128 r21 header shape)
-      val hdr = d.agg(count(lit(1)), count(when(q >= 0.5, lit(1))),
-        max(col("doc_id"))).head()
-      val nDocs = hdr.getLong(0)
-      val nQualityPass = hdr.getLong(1)
-      val copyBase = if (hdr.isNullAt(2)) 1L else hdr.getLong(2) + 1L
-      // empty bootstrap frames derived THROUGH the operators' own
-      // expressions (Curate.emptyStores — shared with q128), so the
-      // tables' schemas can never drift from what incrementalCurate
-      // appends
-      val d0 = d.limit(0)
-      val (fp0, sig0, idx0) = graft.llm.Curate.emptyStores(d, "doc_id", "text")
-      // a crash inside a previous iteration's compact would leave the
+      val (nDocs, nQualityPass, copyBase) = QCommon.ingestHeader(d)
+      // a crash inside a previous run's compact would leave the
       // _compacting sibling behind and fail THIS run's compact loudly —
       // clear it up front (the rerun-completes-the-swap recovery)
       s.sql("DROP TABLE IF EXISTS g129_idx_compacting")
-      // the three bootstrap writes are independent (distinct tables,
-      // no ordering contract) — submit them concurrently so the round
-      // pays max-of-three, not sum-of-three (guide §2.6; QCommon.parJobs)
-      QCommon.parJobs(
-        Seq("g129_fp", "g129_sig", "g129_idx").zip(
-          Seq((fp0, Seq("fp_a")), (sig0, Seq("id")), (idx0, Seq("band", "key"))))
-          .map { case (tn, (df0, keys)) =>
-            () => Bk.writeBucketed(df0, tn, keys, B) }: _*)
-      s.sql("DROP TABLE IF EXISTS g129_man")
-      man.write.mode("overwrite").format("parquet").saveAsTable("g129_man")
+      QCommon.bootstrapStores(d, "g129", B, man)
       val manT = s.table("g129_man")
-      // the in-session parity twin's stores (the q128 r21 mechanics:
-      // lazy delta unions over ONE checkpointed admit frame per round —
-      // the limit(0) bootstraps fold to empty relations)
-      var fpMem: DataFrame = fp0
-      var sigMem: DataFrame = sig0
-      var idxMem: DataFrame = idx0
-      var prevAdmittedDocs = d0.select(col("doc_id").as("id"), col("text"))
-      for (i <- 0 until 3) {
-        // round i = base slice + exact copies of the previous round's
-        // admits under fresh ids (the q128 batch shape) — TWO loop
-        // consumers, so the batch is persisted (materialized by the
-        // first consumer; its lineage reads only d + checkpointed RDDs,
-        // so the appends' catalog refreshes can never recache it)
-        val batch = graft.dsl.Rel.track(
-          d.filter(pmod(col("doc_id"), lit(3)) === i)
-            .unionByName(prevAdmittedDocs.select(
-              (col("id") + copyBase * (i + 1)).as("doc_id"), col("text")))
-            .persist(ML))
-        // durable path: curate against the TABLES, append all three.
-        // localCheckpoint, NOT persist: the admit frame's lineage reads
-        // the very tables the appends mutate, and each append's catalog
-        // refresh RECACHES dependent cached plans — a persist()ed
-        // admitted silently recomputes against the half-mutated stores
-        // between the three appends (observed: the sig append wrote 3
-        // rows of 160 — the recompute re-ran the exact anti-join over
-        // the just-appended fp store). Severing the plan to an RDD scan
-        // is the only safe materialization before a store mutation; the
-        // parity boolean below is the regression guard.
-        val admitted = graft.llm.Curate.incrementalCurate(
-            batch, "doc_id", "text", s.table("g129_fp"), s.table("g129_sig"),
-            bandIndex = Some(s.table("g129_idx")), manifest = Some(manT))
-          .localCheckpoint()
-        // (the per-round no-copy count moved to ONE end-of-loop check
-        // on the sig table — the admits accumulate there verbatim, so
-        // the conjunction over rounds equals the final-table check)
-        // The three appends all read the CHECKPOINTED admit frame and
-        // write DISTINCT tables with no ordering contract (unlike
-        // ingestBatch, whose idx → sig → fp order is its crash-replay
-        // argument — this in-query loop has no replay; the next round
-        // reads the tables only after all three land). Concurrent
-        // submission: the round pays max-of-three write jobs, not
-        // sum-of-three (guide §2.6).
-        QCommon.parJobs(
-          () => Bk.appendBucketed(admitted.select(col("fp_a"), col("fp_b")),
-            "g129_fp", Seq("fp_a"), B),
-          () => Bk.appendBucketed(admitted.select(col("id"), col("sig")),
-            "g129_sig", Seq("id"), B),
-          () => Bk.appendBucketed(
-            Dedup.lshBandIndex(admitted.select(col("id"), col("sig"))),
-            "g129_idx", Seq("band", "key"), B))
-        // in-session twin: SAME batch, ONE localCheckpoint (its three
-        // store deltas are lazy unions of that flat frame — the q128
-        // r21 shape; no table lineage either way)
-        val admMem = graft.llm.Curate.incrementalCurate(
-            batch, "doc_id", "text", fpMem, sigMem,
-            bandIndex = Some(idxMem), manifest = Some(man))
-          .localCheckpoint()
-        fpMem = fpMem.unionByName(admMem.select(col("fp_a"), col("fp_b")))
-        sigMem = sigMem.unionByName(admMem.select(col("id"), col("sig")))
-        idxMem = idxMem.unionByName(
-          Dedup.lshBandIndex(admMem.select(col("id"), col("sig"))))
-        // lazy: lineage reads the checkpointed admit frame + the
-        // persisted batch only, so no checkpoint is needed here
-        prevAdmittedDocs = admitted.select(col("id"))
-          .join(batch, col("id") === col("doc_id"))
-          .select(col("id"), col("text"))
-      }
-      // admit parity: the table-backed corpus IS the in-session corpus
-      // — ONE tagged-union aggregation instead of two exceptAll actions
-      val tblIds = s.table("g129_sig").select(col("id"))
-      val memIds = sigMem.select(col("id"))
-      val parity = QCommon.multisetEqual(tblIds, memIds)
-      // admit count + the no-copy check in the SAME job (was a count
-      // per round plus a separate count here)
-      val cnts = tblIds.agg(count(lit(1)),
-        count(when(col("id") >= copyBase, lit(1)))).head()
-      val nAdmitted = cnts.getLong(0)
-      val noCopyAdmitted = cnts.getLong(1) == 0L
-      // post-append zero-Exchange contract on the index table
-      val aggPlan = s.table("g129_idx").groupBy(col("band"), col("key"))
+      val (_, parity, nAdmitted, noCopyAdmitted) = QCommon.durableRounds(
+        d, "g129", B, copyBase, man, ledger = false)
+      // the index table's bucket aggregation plans with no Exchange
+      def idxAggZeroExchange() = !s.table("g129_idx").groupBy(col("band"), col("key"))
         .agg(collect_list(col("id")).as("ds"))
-        .queryExecution.executedPlan.toString
-      val idxZeroExchange = !aggPlan.contains("Exchange")
+        .queryExecution.executedPlan.toString.contains("Exchange")
+      val idxZeroExchange = idxAggZeroExchange()
       // manifest as a TABLE: a wrong-scheme call fails loudly before
       // any corpus-sized work
       val wrongManifestFails =
@@ -1698,10 +1553,9 @@ object LlmQueries {
       // scheduled maintenance: compact the appended index table —
       // content identical, one file per bucket, co-location preserved
       val idxBefore = s.table("g129_idx").count()
-      Bk.compact(s, "g129_idx")
+      graft.ops.Bucketed.compact(s, "g129_idx")
       val fullIdx = Dedup.lshBandIndex(s.table("g129_sig"))
-      // count preservation + content equality: one count + ONE
-      // tagged-union aggregation (was a count + four exceptAll scans)
+      // count preservation + content equality
       val compactPreserves = s.table("g129_idx").count() == idxBefore &&
         QCommon.multisetEqual(s.table("g129_idx"), fullIdx)
       val idxLoc = new org.apache.hadoop.fs.Path(
@@ -1711,10 +1565,7 @@ object LlmQueries {
       val nIdxFiles = fs.listStatus(idxLoc)
         .count(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
       val compactOneFilePerBucket = nIdxFiles == B
-      val aggPlan2 = s.table("g129_idx").groupBy(col("band"), col("key"))
-        .agg(collect_list(col("id")).as("ds"))
-        .queryExecution.executedPlan.toString
-      val compactZeroExchange = !aggPlan2.contains("Exchange")
+      val compactZeroExchange = idxAggZeroExchange()
       val admitsBounded = nAdmitted <= nQualityPass
       Seq("g129_fp", "g129_sig", "g129_idx", "g129_man")
         .foreach(tn => s.sql(s"DROP TABLE IF EXISTS $tn"))
@@ -1728,66 +1579,53 @@ object LlmQueries {
           "compact_zero_exchange", "admits_bounded_by_gate")
     }),
 
-    // split-invariant ingest mode (r19, VERDICT task 5) as a DRIVER
-    // query: the corpus (real docs + a planted a~b~c near-dup chain
-    // whose members land in three different prefix batches) is ingested
-    // through incrementalCurate(splitInvariant = true) twice — as ONE
-    // batch and as THREE consecutive id-range batches — and the admit
-    // sets must be IDENTICAL (the mode's contract: every seen rep's
-    // signature is appended, so a document's admit decision depends
-    // only on what was seen before it, never on where the boundaries
-    // fall). The planted chain (the LlmSpec sliding-window fixture:
-    // J(a,b) = J(b,c) ≈ 0.58, J(a,c) ≈ 0.31 at threshold 0.45,
-    // bands=32 — candidate discovery probability ≈ 1, spec-pinned
-    // deterministic under the fixed hashes) makes the invariance BITE:
-    // in the DEFAULT chain-pessimistic mode the same 3-batch split
-    // ADMITS the chain tail c (b was dropped and never reached the
-    // store) — that flip is demonstrated in-query as the contrast
-    // boolean. Real ids are shifted ×10 so the planted ids (≡1 mod 10,
-    // one per tercile) can never collide. n_docs is SQL-derivable
-    // (count + 3); the booleans are Spark-checked, oracle-stated.
+    // split-invariant ingest mode as a DRIVER query: the corpus (real
+    // docs + a planted a~b~c near-dup chain whose members land in three
+    // different prefix batches) is ingested through incrementalCurate
+    // (splitInvariant = true) twice — as ONE batch and as THREE
+    // consecutive id-range batches — and the admit sets must be
+    // IDENTICAL (the mode's contract: every seen rep's signature is
+    // appended, so a document's admit decision depends only on what was
+    // seen before it, never on where the boundaries fall). The planted
+    // chain (the LlmSpec sliding-window fixture: J(a,b) = J(b,c) ≈ 0.58,
+    // J(a,c) ≈ 0.31 at threshold 0.45, bands=32 — candidate discovery
+    // probability ≈ 1, spec-pinned deterministic under the fixed
+    // hashes) makes the invariance BITE: in the DEFAULT
+    // chain-pessimistic mode the same 3-batch split ADMITS the chain
+    // tail c (b was dropped and never reached the store) — that flip is
+    // demonstrated in-query as the contrast boolean. Real ids are
+    // shifted ×10 so the planted ids (≡1 mod 10, one per tercile) can
+    // never collide. n_docs is SQL-derivable (count + 3); the booleans
+    // are Spark-checked, oracle-stated.
     "q130_split_invariant_ingest" -> ((s, dir) => {
       import s.implicits._
       val ML = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       // bounded sub-corpus + planted chain from the SHARED fixture
       // (QCommon.chainCorpus): invariance is a property of the RULE,
-      // not of corpus volume — 7 full ingest passes over the whole sf0.1
-      // corpus at threshold 0.45 cost 19 s of pure re-demonstration
-      // (scale evidence lives in the q119/q128 curves, not here)
+      // not of corpus volume — scale evidence lives in the q119/q128
+      // curves, not here
       val (corpus0, t1, t2, aId, _, cId) = QCommon.chainCorpus(s, dir)
       val corpus = graft.dsl.Rel.track(corpus0.persist(ML))
       val nDocs = corpus.count()
-      val empty = corpus.limit(0)
       // one ingest pass over consecutive id-range batches; returns the
-      // accumulated admit-id frame (store discipline per mode contract).
-      // r21 shape: ONE localCheckpoint per batch (the result frame) and
-      // lazy delta unions for fp/sig/admits — was a persist plus THREE
-      // full-store re-materializations per batch (the q128 rationale)
+      // accumulated admit-id frame
       def run(bounds: Seq[Long], splitInv: Boolean): DataFrame = {
-        val (fpE, sigE, _) = graft.llm.Curate.emptyStores(corpus, "doc_id", "text")
-        var fp: DataFrame = fpE
-        var sig: DataFrame = sigE
-        var admits = empty.select(col("doc_id").as("id"))
-        (Seq(Long.MinValue) ++ bounds).zip(bounds ++ Seq(Long.MaxValue)).foreach {
-          case (lo, hi) =>
-            val batch = corpus.filter(col("doc_id") >= lo && col("doc_id") < hi)
-            val res = graft.llm.Curate.incrementalCurate(batch, "doc_id", "text",
-                fp, sig, bands = 32, threshold = 0.45,
-                splitInvariant = splitInv)
-              .localCheckpoint()
-            val adm = if (splitInv) res.filter(col("admitted")) else res
-            fp = fp.unionByName(adm.select(col("fp_a"), col("fp_b")))
-            sig = sig.unionByName(
-              (if (splitInv) res else adm).select(col("id"), col("sig")))
-            admits = admits.unionByName(adm.select(col("id")))
-        }
-        admits
+        var stores = graft.llm.Curate.SessionStores.empty(corpus, "doc_id", "text",
+          bands = 32)
+        val admits = (Seq(Long.MinValue) ++ bounds).zip(bounds ++ Seq(Long.MaxValue))
+          .map { case (lo, hi) =>
+            val (res, next) = stores.ingest(
+              corpus.filter(col("doc_id") >= lo && col("doc_id") < hi),
+              threshold = 0.45, splitInvariant = splitInv)
+            stores = next
+            (if (splitInv) res.filter(col("admitted")) else res).select(col("id"))
+          }
+        admits.reduce(_ unionByName _)
       }
       val one = run(Seq.empty, splitInv = true)
       val three = run(Seq(t1, t2), splitInv = true)
-      // multiset equality in ONE job (was two exceptAll actions), and
-      // the two chain-member probes per frame in ONE aggregation each
-      // (was four filter-counts)
+      // multiset equality in ONE job, and the two chain-member probes
+      // per frame in ONE aggregation each
       val invariant = QCommon.multisetEqual(one, three)
       def chainProbe(f: DataFrame) = f.agg(
         count(when(col("id") === aId, lit(1))),
@@ -1806,13 +1644,13 @@ object LlmQueries {
           "chain_tail_dropped_both", "default_admits_tail_on_split")
     }),
 
-    // STREAMING continuous ingest, batch-replay form (r20, VERDICT
-    // task 1): the q129 durable-table loop driven through
-    // Curate.ingestBatch — the EXACT body streamingIngest wires into
-    // foreachBatch (the MemoryStream end-to-end run lives in
-    // CurateStreamSpec; here the replay-visible semantics are oracled):
-    //  * admit PARITY with the in-session localCheckpoint twin on the
-    //    same batches (would catch the RECACHE hazard — ingestBatch
+    // STREAMING continuous ingest, batch-replay form: the durable-table
+    // loop driven through Curate.ingestBatch WITH a ledger — the EXACT
+    // body streamingIngest wires into foreachBatch (the MemoryStream
+    // end-to-end run lives in CurateStreamSpec; here the replay-visible
+    // semantics are oracled):
+    //  * admit PARITY with the in-session Curate.SessionStores twin on
+    //    the same batches (would catch the RECACHE hazard — ingestBatch
     //    localCheckpoints the admit frame before its appends)
     //  * at-least-once DELIVERY closes: the onAdmitted callback's
     //    delivered total equals the sig table's admit count
@@ -1829,83 +1667,22 @@ object LlmQueries {
     // the anti-pattern the loop queries exist to avoid.
     "q131_streaming_ingest_replay" -> ((s, dir) => {
       import s.implicits._
-      val ML = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val B = 4
       val C = graft.llm.Curate
       val d = t(s, dir, "documents").select(col("doc_id"), col("text"))
       val man = Dedup.lshManifest(s)
-      // corpus scalars in ONE pass (the q128 r21 header shape)
-      val hdr = d.agg(count(lit(1)),
-        count(when(Text.qualityScore(col("text")) >= 0.5, lit(1))),
-        max(col("doc_id"))).head()
-      val nDocs = hdr.getLong(0)
-      val nQualityPass = hdr.getLong(1)
-      val copyBase = if (hdr.isNullAt(2)) 1L else hdr.getLong(2) + 1L
-      val (fp0, sig0, idx0) = C.emptyStores(d, "doc_id", "text")
-      // independent bootstrap writes, submitted concurrently (guide
-      // §2.6; the per-trigger appends inside ingestBatch stay
-      // SEQUENTIAL — their idx → sig → fp order is the crash-replay
-      // correctness argument)
-      QCommon.parJobs(
-        Seq(("g131_fp", fp0, Seq("fp_a")), ("g131_sig", sig0, Seq("id")),
-            ("g131_idx", idx0, Seq("band", "key")))
-          .map { case (tn, df0, keys) =>
-            () => graft.ops.Bucketed.writeBucketed(df0, tn, keys, B) }: _*)
-      s.sql("DROP TABLE IF EXISTS g131_man")
-      man.write.format("parquet").saveAsTable("g131_man")
+      val (nDocs, nQualityPass, copyBase) = QCommon.ingestHeader(d)
+      QCommon.bootstrapStores(d, "g131", B, man)
       s.sql("DROP TABLE IF EXISTS g131_led")
       // all four table counts in ONE action (a union of per-table
-      // aggregates — was four separate count jobs per call, three calls)
+      // aggregates)
       def tableCounts() = Seq("g131_fp", "g131_sig", "g131_idx", "g131_led")
         .map(tn => s.table(tn).agg(count(lit(1)).as("c")))
         .reduce(_ unionByName _).collect().map(_.getLong(0)).toSeq
       var delivered = 0L
       val deliver: (DataFrame, Long) => Unit = (df, _) => delivered += df.count()
-      // in-session parity twin (the q128 r21 mechanics: lazy delta
-      // unions over one checkpointed admit frame per round)
-      var fpMem: DataFrame = fp0
-      var sigMem: DataFrame = sig0
-      var prevAdmittedDocs = d.limit(0).select(col("doc_id").as("id"), col("text"))
-      var lastBatch: DataFrame = null
-      val batchPersists = scala.collection.mutable.ArrayBuffer[DataFrame]()
-      for (i <- 0 until 3) {
-        // plain persist, NOT Rel.track: ingestBatch's finally releases
-        // every tracked frame (its own per-batch hygiene), which would
-        // silently unpersist this batch before the in-session twin
-        // consumes it — unpersisted explicitly at the end instead
-        val batch = d.filter(pmod(col("doc_id"), lit(3)) === i)
-          .unionByName(prevAdmittedDocs.select(
-            (col("id") + copyBase * (i + 1)).as("doc_id"), col("text")))
-          .persist(ML)
-        batchPersists += batch
-        batch.count()
-        C.ingestBatch(batch, i.toLong, "doc_id", "text",
-          "g131_fp", "g131_sig", "g131_idx", B,
-          manifestTable = Some("g131_man"), ledgerTable = Some("g131_led"),
-          onAdmitted = deliver)
-        val admMem = C.incrementalCurate(
-            batch, "doc_id", "text", fpMem, sigMem, manifest = Some(man))
-          .localCheckpoint()
-        fpMem = fpMem.unionByName(admMem.select(col("fp_a"), col("fp_b")))
-        sigMem = sigMem.unionByName(admMem.select(col("id"), col("sig")))
-        // next round's copies come from the TABLE path's admits (round
-        // i admits = sig-table ids ∩ this batch's ids — batch ids are
-        // disjoint across rounds)
-        prevAdmittedDocs = s.table("g131_sig").select(col("id"))
-          .join(batch, col("id") === col("doc_id"))
-          .select(col("id"), col("text"))
-          .localCheckpoint()
-        lastBatch = batch
-      }
-      val tblIds = s.table("g131_sig").select(col("id"))
-      val memIds = sigMem.select(col("id"))
-      // parity via ONE tagged-union aggregation (was two exceptAll
-      // actions); admit count + no-copy check in one further job
-      val parity = QCommon.multisetEqual(tblIds, memIds)
-      val cnts = tblIds.agg(count(lit(1)),
-        count(when(col("id") >= copyBase, lit(1)))).head()
-      val nAdmitted = cnts.getLong(0)
-      val noCopyAdmitted = cnts.getLong(1) == 0L
+      val (lastBatch, parity, nAdmitted, noCopyAdmitted) = QCommon.durableRounds(
+        d, "g131", B, copyBase, man, ledger = true, onAdmitted = deliver)
       val deliveredMatches = delivered == nAdmitted
       // exactly-once: replay the last LEDGERED batch id — a no-op
       val before = tableCounts()
@@ -1919,7 +1696,7 @@ object LlmQueries {
       C.ingestBatch(
         // every admit is a real id (noCopyAdmitted above), so d alone
         // recovers the admitted texts
-        tblIds.join(d, col("id") === col("doc_id"))
+        s.table("g131_sig").join(d, col("id") === col("doc_id"))
           .select((col("id") + copyBase * 5).as("doc_id"), col("text")),
         3L, "doc_id", "text", "g131_fp", "g131_sig", "g131_idx", B,
         manifestTable = Some("g131_man"), ledgerTable = Some("g131_led"),
@@ -1929,7 +1706,6 @@ object LlmQueries {
       val ledgerComplete = s.table("g131_led").select(col("batch_id"))
         .as[Long].collect().toSet == Set(0L, 1L, 2L, 3L)
       val admitsBounded = nAdmitted <= nQualityPass
-      batchPersists.foreach(_.unpersist(false))
       Seq("g131_fp", "g131_sig", "g131_idx", "g131_man", "g131_led")
         .foreach(tn => s.sql(s"DROP TABLE IF EXISTS $tn"))
       Seq((nDocs, nQualityPass, 3, parity, noCopyAdmitted, deliveredMatches,
@@ -2034,6 +1810,26 @@ object LlmQueries {
     """list_reduce(list_prepend(CAST(0 AS BIGINT),
        list_transform(string_split(g, ''), c -> ord(c))),
        (h, c) -> (h * 31 + c) % 2147483647)"""
+
+  /** Oracle of the 3-round ingest loops (q128, q129, q131): the
+    * SQL-derivable header — total docs and quality-gate passes over the
+    * base batches (= over all documents, each doc in exactly one slice)
+    * — then `rounds` = 3 and each Spark-checked invariant `flags` as
+    * TRUE. */
+  private def ingestLoopSql(rounds: String, flags: String*): String =
+    s"""WITH s AS (SELECT doc_id, text,
+           len(string_split(text, ' '))::DOUBLE AS n,
+           len(list_distinct(string_split(text, ' ')))::DOUBLE AS lnd
+         FROM documents),
+       q AS (SELECT doc_id,
+           FLOOR(((lnd / n) * 0.4
+                  + (LEAST(LENGTH(text)::DOUBLE / n, 8.0) / 8.0) * 0.3
+                  + LEAST(n / 100.0, 1.0) * 0.3) * 10000 + 0.5) / 10000
+             AS quality
+         FROM s)
+       SELECT (SELECT COUNT(*) FROM documents) AS n_docs,
+         (SELECT COUNT(*) FROM q WHERE quality >= 0.5) AS n_quality_pass,
+         3 AS $rounds, ${flags.map(f => s"TRUE AS $f").mkString(", ")}"""
 
   val oracleSql: Map[String, String] = Map(
     // q32 property oracle (the q26/q42 pattern): the 64 fingerprint bits
@@ -2553,82 +2349,29 @@ object LlmQueries {
            TRUE AS no_reingested_kept, TRUE AS no_kept_exact_in_store,
            TRUE AS no_kept_exact_within, TRUE AS kept_subset_of_batch,
            TRUE AS indexed_equals_sig_path""",
-    // q128: SQL-derivable counts (total docs, quality-gate passes over
-    // the base batches = over all documents, each doc in exactly one
-    // slice) + the loop invariants as Spark-checked booleans the oracle
+    // q128: the loop invariants as Spark-checked booleans the oracle
     // states — the q119/q126 pattern; admit ids themselves are
     // hash-dependent AND batch-split-dependent (chain-pessimistic rule)
-    "q128_ingest_loop" ->
-      """WITH s AS (SELECT doc_id, text,
-             len(string_split(text, ' '))::DOUBLE AS n,
-             len(list_distinct(string_split(text, ' ')))::DOUBLE AS lnd
-           FROM documents),
-         q AS (SELECT doc_id,
-             FLOOR(((lnd / n) * 0.4
-                    + (LEAST(LENGTH(text)::DOUBLE / n, 8.0) / 8.0) * 0.3
-                    + LEAST(n / 100.0, 1.0) * 0.3) * 10000 + 0.5) / 10000
-               AS quality
-           FROM s)
-         SELECT (SELECT COUNT(*) FROM documents) AS n_docs,
-           (SELECT COUNT(*) FROM q WHERE quality >= 0.5) AS n_quality_pass,
-           3 AS n_rounds,
-           TRUE AS no_reingested_copy_admitted,
-           TRUE AS reingest_admits_nothing,
-           TRUE AS admits_subset_of_batches,
-           TRUE AS no_cross_round_exact,
-           TRUE AS no_cross_round_near,
-           TRUE AS index_equals_sigstore_bands,
-           TRUE AS wrong_manifest_fails,
-           TRUE AS admits_bounded_by_gate""",
-    // q129: the durable-table twin of q128 — same SQL-derivable counts,
-    // the durable-path invariants (parity with the in-session loop,
-    // zero-Exchange post-append plans, manifest-table guard, compact
-    // preservation) as Spark-checked booleans the oracle states
-    "q129_ingest_loop_tables" ->
-      """WITH s AS (SELECT doc_id, text,
-             len(string_split(text, ' '))::DOUBLE AS n,
-             len(list_distinct(string_split(text, ' ')))::DOUBLE AS lnd
-           FROM documents),
-         q AS (SELECT doc_id,
-             FLOOR(((lnd / n) * 0.4
-                    + (LEAST(LENGTH(text)::DOUBLE / n, 8.0) / 8.0) * 0.3
-                    + LEAST(n / 100.0, 1.0) * 0.3) * 10000 + 0.5) / 10000
-               AS quality
-           FROM s)
-         SELECT (SELECT COUNT(*) FROM documents) AS n_docs,
-           (SELECT COUNT(*) FROM q WHERE quality >= 0.5) AS n_quality_pass,
-           3 AS n_rounds,
-           TRUE AS table_admits_equal_insession,
-           TRUE AS no_reingested_copy_admitted,
-           TRUE AS idx_agg_zero_exchange_post_append,
-           TRUE AS manifest_table_wrong_scheme_fails,
-           TRUE AS compact_preserves_index,
-           TRUE AS compact_one_file_per_bucket,
-           TRUE AS compact_zero_exchange,
-           TRUE AS admits_bounded_by_gate""",
-    // q131: the q129 count skeleton + the streaming-replay booleans
-    // (Spark-checked invariants of the foreachBatch body, oracle-stated)
-    "q131_streaming_ingest_replay" ->
-      """WITH s AS (SELECT doc_id, text,
-             len(string_split(text, ' '))::DOUBLE AS n,
-             len(list_distinct(string_split(text, ' ')))::DOUBLE AS lnd
-           FROM documents),
-         q AS (SELECT doc_id,
-             FLOOR(((lnd / n) * 0.4
-                    + (LEAST(LENGTH(text)::DOUBLE / n, 8.0) / 8.0) * 0.3
-                    + LEAST(n / 100.0, 1.0) * 0.3) * 10000 + 0.5) / 10000
-               AS quality
-           FROM s)
-         SELECT (SELECT COUNT(*) FROM documents) AS n_docs,
-           (SELECT COUNT(*) FROM q WHERE quality >= 0.5) AS n_quality_pass,
-           3 AS n_batches,
-           TRUE AS table_admits_equal_insession,
-           TRUE AS no_reingested_copy_admitted,
-           TRUE AS delivered_equals_admitted,
-           TRUE AS ledgered_replay_noop,
-           TRUE AS new_batch_reingest_admits_nothing,
-           TRUE AS ledger_complete,
-           TRUE AS admits_bounded_by_gate""",
+    "q128_ingest_loop" -> ingestLoopSql("n_rounds", "no_reingested_copy_admitted",
+      "reingest_admits_nothing", "admits_subset_of_batches",
+      "no_cross_round_exact", "no_cross_round_near",
+      "index_equals_sigstore_bands", "wrong_manifest_fails",
+      "admits_bounded_by_gate"),
+    // q129: the durable-path invariants (parity with the in-session
+    // loop, zero-Exchange post-append plans, manifest-table guard,
+    // compact preservation)
+    "q129_ingest_loop_tables" -> ingestLoopSql("n_rounds",
+      "table_admits_equal_insession", "no_reingested_copy_admitted",
+      "idx_agg_zero_exchange_post_append", "manifest_table_wrong_scheme_fails",
+      "compact_preserves_index", "compact_one_file_per_bucket",
+      "compact_zero_exchange", "admits_bounded_by_gate"),
+    // q131: the streaming-replay booleans (invariants of the
+    // foreachBatch body)
+    "q131_streaming_ingest_replay" -> ingestLoopSql("n_batches",
+      "table_admits_equal_insession", "no_reingested_copy_admitted",
+      "delivered_equals_admitted", "ledgered_replay_noop",
+      "new_batch_reingest_admits_nothing", "ledger_complete",
+      "admits_bounded_by_gate"),
     // q132: SQL-derivable corpus/query counts + the persisted-index
     // invariants (Spark-checked: parity twins, plan assert, fail-loud
     // probe — the q42/q129 oracle pattern composed)

@@ -60,8 +60,8 @@ private[graft] object QCommon {
   /** Run INDEPENDENT Spark jobs concurrently from a small driver pool
     * (guide §2.6 "overlap independent jobs"): Spark's scheduler happily
     * runs several jobs at once inside one application — actions are
-    * only sequential because driver code calls them sequentially. The
-    * ingest capstones submit three same-shaped store writes per round
+    * only sequential because driver code calls them sequentially.
+    * [[bootstrapStores]] submits three same-shaped store-table writes
     * whose wall-clock is driver/job overhead, not data; overlapping
     * them collapses sum-of-jobs to max-of-jobs. ONLY for jobs with no
     * ordering contract: [[graft.llm.Curate.ingestBatch]]'s idx → sig →
@@ -114,6 +114,97 @@ private[graft] object QCommon {
     import org.apache.spark.sql.functions.{col, max}
     val r = df.agg(max(col(idCol))).head()
     if (r.isNullAt(0)) 1L else r.getLong(0) + 1L
+  }
+
+  /** The ingest capstones' corpus header (q128, q129, q131), one
+    * aggregation: (n_docs, n_quality_pass, copyBase). copyBase is
+    * [[copyBase]]'s `max(doc_id) + 1` with the same empty-corpus guard;
+    * every real id is below it, so ids at or above it are re-ingested
+    * copies. */
+  def ingestHeader(d: DataFrame): (Long, Long, Long) = {
+    import org.apache.spark.sql.functions.{col, count, lit, max, when}
+    val hdr = d.agg(count(lit(1)),
+      count(when(graft.llm.Text.qualityScore(col("text")) >= 0.5, lit(1))),
+      max(col("doc_id"))).head()
+    (hdr.getLong(0), hdr.getLong(1),
+      if (hdr.isNullAt(2)) 1L else hdr.getLong(2) + 1L)
+  }
+
+  /** Round `i`'s ingest batch (doc_id, text): the base slice
+    * `doc_id % 3 == i` plus exact copies of the previous round's admits
+    * `prev` (id, text) under fresh ids `id + copyBase*(i+1)`, which the
+    * stores the loop just appended to must reject. */
+  def roundBatch(d: DataFrame, prev: DataFrame, copyBase: Long, i: Int): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit, pmod}
+    d.filter(pmod(col("doc_id"), lit(3)) === i)
+      .unionByName(prev.select(
+        (col("id") + copyBase * (i + 1)).as("doc_id"), col("text")))
+  }
+
+  /** Bootstraps durable ingest stores `{prefix}_fp`, `_sig`, `_idx`
+    * (empty, bucketed into `buckets`, schemas from
+    * [[graft.llm.Curate.emptyStores]]) and the manifest table
+    * `{prefix}_man` holding `man`. The three store writes are
+    * independent tables, so they run concurrently ([[parJobs]]). */
+  def bootstrapStores(d: DataFrame, prefix: String, buckets: Int,
+                      man: DataFrame): Unit = {
+    val (fp0, sig0, idx0) = graft.llm.Curate.emptyStores(d, "doc_id", "text")
+    parJobs(Seq((fp0, "fp", Seq("fp_a")), (sig0, "sig", Seq("id")),
+        (idx0, "idx", Seq("band", "key"))).map { case (df0, t, keys) =>
+      () => graft.ops.Bucketed.writeBucketed(df0, s"${prefix}_$t", keys, buckets) }: _*)
+    graft.ops.Bucketed.writePlain(man, s"${prefix}_man")
+  }
+
+  /** The durable capstones' three rounds (q129, q131): round i's
+    * [[roundBatch]] goes through [[graft.llm.Curate.ingestBatch]] into
+    * the `{prefix}` tables ([[bootstrapStores]]; the `{prefix}_led`
+    * ledger when `ledger`) and through an unindexed in-session
+    * [[graft.llm.Curate.SessionStores]] twin, so the tables' indexed
+    * probe is checked against an independent route; the next round's
+    * copies come from the twin's checkpointed admits. Each batch is a
+    * plain persist, counted BEFORE ingestBatch and not tracked:
+    * ingestBatch's `finally` releases tracked frames and unpersists
+    * RDDs cached during the call, which would drop a batch the twin
+    * and the next round still read. Every batch is unpersisted before
+    * returning, on failure too.
+    *
+    * @return (the last round's batch, no longer cached — a ledgered
+    *         replay of it reads only the ledger; whether the table and
+    *         twin admit ids are equal multisets; the sig table's row
+    *         count; whether no admitted id is a re-ingested copy,
+    *         id ≥ copyBase)
+    */
+  def durableRounds(d: DataFrame, prefix: String, buckets: Int, copyBase: Long,
+                    man: DataFrame, ledger: Boolean,
+                    onAdmitted: (DataFrame, Long) => Unit = (_, _) => ())
+      : (DataFrame, Boolean, Long, Boolean) = {
+    import org.apache.spark.sql.functions.{col, count, lit, when}
+    val C = graft.llm.Curate
+    var mem = C.SessionStores.empty(d, "doc_id", "text")
+    var prev = d.limit(0).select(col("doc_id").as("id"), col("text"))
+    val batches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try {
+      for (i <- 0 until 3) {
+        val batch = roundBatch(d, prev, copyBase, i)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        batches += batch
+        batch.count()
+        C.ingestBatch(batch, i.toLong, "doc_id", "text", s"${prefix}_fp",
+          s"${prefix}_sig", s"${prefix}_idx", buckets,
+          manifestTable = Some(s"${prefix}_man"),
+          ledgerTable = if (ledger) Some(s"${prefix}_led") else None,
+          onAdmitted = onAdmitted)
+        val (adm, next) = mem.ingest(batch, manifest = Some(man))
+        mem = next
+        prev = adm.select(col("id")).join(batch, col("id") === col("doc_id"))
+          .select(col("id"), col("text"))
+      }
+    } finally batches.foreach(_.unpersist(false))
+    val tblIds = d.sparkSession.table(s"${prefix}_sig").select(col("id"))
+    val parity = multisetEqual(tblIds, mem.sig.select(col("id")))
+    val cnts = tblIds.agg(count(lit(1)),
+      count(when(col("id") >= copyBase, lit(1)))).head()
+    (batches.last, parity, cnts.getLong(0), cnts.getLong(1) == 0L)
   }
 
   /** The q130 split-invariance fixture: a bounded ≤1500-real-doc

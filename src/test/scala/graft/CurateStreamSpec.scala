@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.llm.{Curate, Dedup}
 import graft.ops.Bucketed
+import graft.queries.QCommon
 
 /** Streaming continuous ingest (r20, VERDICT task 1): Curate.streamingIngest
   * = foreachBatch(Curate.ingestBatch) against the durable bucketed store
@@ -50,9 +51,10 @@ class CurateStreamSpec extends SparkSuite {
   // exact, 21 exact-vs-store, 25 near-vs-store (default mode) / exact-sig
   // copy of seen rep 13 (split-invariant mode — dropped either way)
 
-  /** The q128-style in-session twin: same batches, localCheckpoint
-    * stores, the Curate append contract per admit mode. Returns
-    * (admit ids, seen-rep sig ids). */
+  /** The hand-rolled in-session twin, the independent reference for
+    * both `ingestBatch` and [[Curate.SessionStores]]: same batches,
+    * localCheckpoint stores, the Curate append contract per admit mode
+    * written out here. Returns (admit ids, seen-rep sig ids). */
   private def batchLoop(splitInv: Boolean): (Set[Long], Set[Long]) = {
     val d0 = Seq.empty[(Long, String)].toDF("doc_id", "text")
     val (fp0, sig0, _) = Curate.emptyStores(d0, "doc_id", "text")
@@ -74,6 +76,39 @@ class CurateStreamSpec extends SparkSuite {
       (admits, sig.select("id").as[Long].collect().toSet)
     } finally graft.dsl.Rel.releaseTracked()
   }
+
+  /** The same batches through [[Curate.SessionStores]]. Returns (admit
+    * ids, seen-rep sig ids, sig rows, idx ≡ lshBandIndex(sig) — true
+    * when not `indexed`). */
+  private def sessionLoop(splitInv: Boolean, indexed: Boolean)
+      : (Set[Long], Set[Long], Long, Boolean) = {
+    val d0 = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    var st = Curate.SessionStores.empty(d0, "doc_id", "text", indexed = indexed)
+    var admits = Set.empty[Long]
+    try {
+      batches.foreach { rows =>
+        val (res, next) = st.ingest(rows.toDF("doc_id", "text"),
+          threshold = 0.5, splitInvariant = splitInv)
+        st = next
+        admits ++= (if (splitInv) res.filter($"admitted") else res)
+          .select("id").as[Long].collect()
+      }
+      (admits, st.sig.select("id").as[Long].collect().toSet, st.sig.count(),
+        st.idx.forall(QCommon.multisetEqual(_, Dedup.lshBandIndex(st.sig))))
+    } finally graft.dsl.Rel.releaseTracked()
+  }
+
+  /** Asserts that [[sessionLoop]], indexed and not, matches the batch
+    * loop's admits and seen reps. */
+  private def assertSessionParity(splitInv: Boolean, admits: Set[Long],
+                                  seen: Set[Long]): Unit =
+    for (indexed <- Seq(false, true)) {
+      val (a, sn, nSig, idxOk) = sessionLoop(splitInv, indexed)
+      assert(a == admits && sn == seen,
+        s"SessionStores(indexed=$indexed): admits $a seen $sn vs $admits $seen")
+      assert(nSig == seen.size.toLong, s"SessionStores(indexed=$indexed): $nSig sig rows")
+      assert(idxOk, s"SessionStores(indexed=$indexed): idx != lshBandIndex(sig)")
+    }
 
   private def runStream(prefix: String, splitInv: Boolean,
                         onAdmitted: (DataFrame, Long) => Unit = (_, _) => ())
@@ -99,7 +134,8 @@ class CurateStreamSpec extends SparkSuite {
       var delivered = Set.empty[Long]
       runStream(p, splitInv = false,
         onAdmitted = (df, _) => delivered ++= df.select("id").as[Long].collect())
-      val (memAdmits, _) = batchLoop(splitInv = false)
+      val (memAdmits, memSeen) = batchLoop(splitInv = false)
+      assertSessionParity(splitInv = false, memAdmits, memSeen)
       val tblAdmits = spark.table(s"${p}_sig").select("id").as[Long].collect().toSet
       assert(tblAdmits == memAdmits,
         s"stream $tblAdmits vs batch loop $memAdmits")
@@ -122,6 +158,7 @@ class CurateStreamSpec extends SparkSuite {
     try {
       runStream(p, splitInv = true)
       val (memAdmits, memSeen) = batchLoop(splitInv = true)
+      assertSessionParity(splitInv = true, memAdmits, memSeen)
       val tblSeen = spark.table(s"${p}_sig").select("id").as[Long].collect().toSet
       // fp rows are admit-only, sig rows cover every SEEN rep
       assert(tblSeen == memSeen, s"stream seen $tblSeen vs batch $memSeen")

@@ -18,7 +18,13 @@ sbt -batch "compile; Test/compile" >/tmp/gate_compile.log 2>&1 || {
 echo "[gate] compile OK"
 
 if [[ "${1:-}" == "full" ]]; then
-  echo "[gate] sbt test"
+  # size the forked test JVM as the tier-1 run does: build.sbt's -Xmx
+  # default (24g) is more than a 15 GB machine has. Only where unset.
+  : "${SPARK_GRAFT_CPUS:=$(env -u OMP_NUM_THREADS nproc)}"
+  : "${SPARK_DRIVER_MEM:=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)}"
+  : "${SPARK_LOCAL_DIRS:=/tmp/spark-local}"
+  export SPARK_GRAFT_CPUS SPARK_DRIVER_MEM SPARK_LOCAL_DIRS
+  echo "[gate] sbt test (SPARK_DRIVER_MEM=$SPARK_DRIVER_MEM SPARK_GRAFT_CPUS=$SPARK_GRAFT_CPUS)"
   sbt -batch test >/tmp/gate_test.log 2>&1 || {
     tail -40 /tmp/gate_test.log
     echo "[gate] FAIL: tests red"

@@ -70,7 +70,8 @@ object Graft {
   *
   * Mirrors the reference's `LOAD` with a self-describing format
   * [R: src/org/apache/pig/newplan/logical/relational/LOLoad.java]:
-  * schema-on-read from parquet, plus per-table normalization quirks.
+  * schema-on-read from parquet (inferred once per file listing, see
+  * [[graft.sources.Loaders]]), plus per-table normalization quirks.
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -93,7 +94,7 @@ object Tables {
     // unrelated reads (r17 review). A foreign session without the flag
     // fails LOUDLY on nanos files ("Illegal Parquet type"), which is
     // the correct surface for the fix.
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val df = graft.sources.Loaders.parquet(spark, s"$sfDir/$name.parquet")
     name match {
       case "events" =>
         df.schema("ts").dataType match {

@@ -563,7 +563,9 @@ final class PigEngine(spark: SparkSession, baseDir: Option[String] = None) {
   // -------------------------------------------------------------- operators
 
   private def compileOp(alias: String, op: RelOp): RelInfo = op match {
-    case Load(path, using, schema) => RelInfo(() => load(path, using, schema))
+    case Load(path, using, schema) =>
+      // resolved once, at first use: every reader of the alias shares it
+      lazy val d = load(path, using, schema); RelInfo(() => d)
 
     case FilterOp(in, cond) =>
       val d = relation(in); RelInfo(() => d.filter(compileExpr(d, cond)))
@@ -742,7 +744,7 @@ final class PigEngine(spark: SparkSession, baseDir: Option[String] = None) {
         val d = graft.sources.Loaders.avroLoader(spark, target)
         schema.map(fs => d.toDF(fs.map(_.name): _*)).getOrElse(d)
       case _ => // parquet is this engine's native format (BinStorage analog)
-        val d = graft.sources.Loaders.binStorage(spark, target)
+        val d = graft.sources.Loaders.parquet(spark, target)
         schema.map(fs => d.toDF(fs.map(_.name): _*)).getOrElse(d)
     }
   }
